@@ -4,7 +4,8 @@ driver; extra instrumentation lives here — guide §1.4/§1.5).
 Per query: DataFrame CONSTRUCTION time (py4j plan building + any driver-loop
 jobs) and EXECUTION time (noop sink materialization) measured separately,
 min over repeats, plus optional `.explain("formatted")` capture into
-plans/r06/<query>_<tag>.txt.
+plans/r06/<query>_<tag>.txt. Each query's caches are released after it is
+materialized, so every repeat runs cold.
 
 Usage:
   python bench_extra.py [--queries q1,q2,...] [--repeats N] [--explain TAG]
@@ -35,7 +36,7 @@ def main():
     args = ap.parse_args()
 
     from eva_opentargets_spark.queries import QUERIES
-    from eva_opentargets_spark.session import get_spark
+    from eva_opentargets_spark.session import Persisted, get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -51,7 +52,8 @@ def main():
         for name in names:
             spark.sparkContext.setJobDescription(f"r06 {name} rep{r}")
             t0 = time.time()
-            df = QUERIES[name](spark, sf_dir)
+            with Persisted() as held:
+                df = QUERIES[name](spark, sf_dir)
             t1 = time.time()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.time()
@@ -65,6 +67,7 @@ def main():
                     df._jdf.queryExecution(), "formatted")
                 with open(os.path.join(plans_dir, f"{name}_{args.explain}.txt"), "w") as fh:
                     fh.write(plan)
+            held.release()
         spark.sparkContext.setJobDescription(None)
 
     if args.flagship:

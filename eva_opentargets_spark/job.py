@@ -24,9 +24,15 @@ import time
 from pyspark.sql import SparkSession, functions as F
 
 from eva_opentargets_spark.operators.curation import curation_table
-from eva_opentargets_spark.operators.linking import link_cascade, unpersist_cascade
-from eva_opentargets_spark.pipeline import compute_metrics, run_pipeline
+from eva_opentargets_spark.operators.linking import link_cascade
+from eva_opentargets_spark.pipeline import (
+    compute_metrics,
+    counter_frame,
+    link_counters,
+    run_pipeline,
+)
 from eva_opentargets_spark.plans.checkpoint import run_waves
+from eva_opentargets_spark.session import Persisted
 from eva_opentargets_spark.sources.dictionary import demo_terms, demo_xrefs
 from eva_opentargets_spark.sources.transcripts import derive_transcripts, read_transcripts
 
@@ -83,7 +89,8 @@ def main(argv=None):
             F.sum("n_conversations").alias("n_conversations"),
         )
     )
-    links, candidates, unresolved = link_cascade(global_distinct, terms, xrefs)
+    with Persisted() as cascade:
+        links, candidates, unresolved = link_cascade(global_distinct, terms, xrefs)
     curation_table(unresolved, candidates, global_distinct).write.mode("overwrite").parquet(
         f"{args.output}/curation"
     )
@@ -96,28 +103,11 @@ def main(argv=None):
         .agg(F.sum("value").alias("value"))
         .select(F.lit(run_id).alias("run_id"), F.lit("all").alias("partition"), "counter", "value")
     )
-    by_type = {
-        r["match_type"]: r["n"]
-        for r in links.select("mention_norm", "match_type")
-        .distinct()
-        .groupBy("match_type")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    link_rows = [
-        (run_id, "all", "mentions_distinct", global_distinct.count()),
-        (run_id, "all", "unmapped", unresolved.count()),
-    ] + [
-        (run_id, "all", f"linked_{mt}", int(by_type.get(mt, 0)))
-        for mt in ("exact", "normalized", "fuzzy", "xref", "replacement")
-    ]
-    link_metrics = spark.createDataFrame(
-        link_rows, "run_id string, partition string, counter string, value long"
-    )
+    link_metrics = counter_frame(spark, run_id, "all", link_counters(links, unresolved))
     corpus_totals.unionByName(link_metrics).write.mode("overwrite").parquet(
         f"{args.output}/metrics"
     )
-    unpersist_cascade(links)
+    cascade.release()
     print(f"completed buckets: {sorted(manifest.completed())}")
     spark.stop()
 

@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import persist
+
 SEP = "\x1f"  # unit separator: never appears in tokenized text by contract
 
 
@@ -99,7 +101,7 @@ def bpe_merges(docs: DataFrame, n_merges: int = 6, text_col: str = "text") -> Da
     # (the top-1 collect, which also populates the cache on round 1).
     # That halves the driver-loop job count (13 -> 7 actions for 6
     # merges); measured 6.2 -> ~2.8 s at sf0.1 (bench_extra, min-of-2).
-    base = word_vocab(docs, text_col).withColumn("s", _wrapped(F.col("word"))).persist()
+    base = persist(word_vocab(docs, text_col).withColumn("s", _wrapped(F.col("word"))))
     merges: list[tuple[int, str, str, int]] = []
     try:
         for rnd in range(1, n_merges + 1):

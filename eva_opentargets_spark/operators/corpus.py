@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text import quality_score, tokens
+from ..session import persist
 
 
 def corpus_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -234,7 +235,7 @@ def boilerplate_score(
     sh = _word_shingles(text_col, n)
     # persisted for its two consumers (df aggregation + flag join-back):
     # the in-row shingle build was otherwise evaluated twice (round 6)
-    doc_sh = docs.select("doc_id", F.explode(F.array_distinct(sh)).alias("sh")).persist()
+    doc_sh = persist(docs.select("doc_id", F.explode(F.array_distinct(sh)).alias("sh")))
     frequent = (
         doc_sh.groupBy("sh")
         .agg(F.count("*").alias("df"))

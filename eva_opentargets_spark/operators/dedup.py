@@ -22,6 +22,7 @@ from functools import lru_cache, reduce
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text import fingerprint
+from ..session import persist
 
 # Production-realistic LSH parameterization: 64 hashes in 8 bands of 8 rows
 # puts the S-curve threshold at (1/8)^(1/8) ~= 0.77 — tuned to the 0.8
@@ -163,9 +164,8 @@ def minhash_candidate_pairs(
     which, with the in-row signature computation, is the FIRST shuffle of
     the whole dedup path. The band table is persisted for the self-join's
     two sides (round 6: the in-row 64-hash signature was otherwise
-    computed twice; 1.57 -> 0.97 s at sf0.1) — cache lifetime is tied to
-    the result frame's lineage, as in winnow/near_dup_clusters."""
-    all_bands = band_table(docs, n_hashes, n_bands).persist()
+    computed twice; 1.57 -> 0.97 s at sf0.1)."""
+    all_bands = persist(band_table(docs, n_hashes, n_bands))
     a = all_bands.alias("a")
     b = all_bands.alias("b")
     return (
@@ -201,7 +201,7 @@ def incremental_minhash_pairs(
     minhash_candidate_pairs(corpus + new) to pairs touching a new doc —
     the equality is pytest-pinned."""
     all_docs = corpus_docs.unionByName(new_docs)
-    all_bands = band_table(all_docs, n_hashes, n_bands).persist()
+    all_bands = persist(band_table(all_docs, n_hashes, n_bands))
     new_ids = new_docs.select("doc_id")
     new_bands = all_bands.join(F.broadcast(new_ids), "doc_id", "inner")
     a, b = new_bands.alias("a"), all_bands.alias("b")
@@ -261,16 +261,15 @@ def winnow_substring_pairs(
     # repartition being computed once, but AQE's per-stage execution does
     # not reliably reuse it across the consumers inside one query
     # (measured 5.3 s as-is vs 1.3 s persisted at sf0.1, identical rows).
-    # The cache lives as long as the result frame's lineage
-    # (ContextCleaner reclaims it on GC) — same posture as
-    # near_dup_clusters' pair persist.
     parallelism = docs.sparkSession.sparkContext.defaultParallelism
     if estimated_input_splits(docs) < parallelism:
         docs = docs.repartition(parallelism, id_col)
-    fps = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(winnow_fingerprints(F.lower(F.col(text_col)))).alias("fp"),
-    ).persist()
+    fps = persist(
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.explode(winnow_fingerprints(F.lower(F.col(text_col)))).alias("fp"),
+        )
+    )
     heavy = (
         fps.groupBy("fp")
         .agg(F.count("*").alias("df"))
@@ -461,19 +460,21 @@ def hamming_near_dups(sim: DataFrame, max_hamming: int = 3, bits: int = 32) -> D
     mask = (1 << chunk_bits) - 1
     # persisted for the self-join's two sides (round 6: the upstream
     # in-row SimHash vote expression was otherwise evaluated twice;
-    # 1.41 -> 0.70 s at sf0.1) — lineage-held cache, as elsewhere
-    chunked = sim.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright("simhash", chunk_bits * c).bitwiseAND(F.lit(mask))
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("chunk", "ckey"),
-    ).persist()
+    # 1.41 -> 0.70 s at sf0.1)
+    chunked = persist(
+        sim.select(
+            "doc_id",
+            "simhash",
+            F.posexplode(
+                F.array(
+                    *[
+                        F.shiftright("simhash", chunk_bits * c).bitwiseAND(F.lit(mask))
+                        for c in range(n_chunks)
+                    ]
+                )
+            ).alias("chunk", "ckey"),
+        )
+    )
     a, b = chunked.alias("a"), chunked.alias("b")
     cand = (
         a.join(
@@ -503,7 +504,6 @@ def near_dup_clusters(
     id_col: str = "doc_id",
     until_converged: bool = False,
     max_rounds: int = 50,
-    persisted_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Near-dup CLUSTERS from candidate pairs: min-label propagation over
     the pair graph — after `rounds` steps every doc carries the smallest
@@ -523,31 +523,18 @@ def near_dup_clusters(
     kmeans-style driver loop that stops when a round changes no label
     (one extra count job per round), for graphs where chains matter.
     Fixed rounds keep the query oracle-expressible (unrolled CTE twin,
-    the same discipline as ann_kmeans_cells).
-
-    Persistence contract (round-4 ADVICE #1: no monkey-patched handle
-    attributes): with until_converged, the final labels frame is persisted
-    by the loop. If the caller supplies `persisted_out`, the handle is
-    appended there and the CALLER owns unpersisting it. Without it, the
-    result is localCheckpoint(eager)-materialized and the loop cache is
-    released before returning — downstream consumers read the checkpoint
-    (lineage truncated, so nothing recomputes the round chain), and the
-    checkpoint storage's lifetime is tied to the returned frame itself
-    (ContextCleaner reclaims it on GC), not leaked into the session."""
+    the same discipline as ann_kmeans_cells). The pair list and, with
+    until_converged, the converged labels stay persisted for the result's
+    consumers; the caller's session.Persisted owner releases them."""
     nodes = docs.select(F.col(id_col).alias("doc_id"))
     e = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     # Persist the pair list once when it will be consumed by several
     # propagation rounds (round 6): AQE's stage reuse does NOT cover the
     # pair generator across the per-round join queries, so every round was
     # re-running the band self-join + distinct (measured: the curate
-    # funnel 6.1 -> 3.5 s at sf0.1 with the persist). Storage is
-    # MEMORY_AND_DISK and lives as long as the result frame's lineage
-    # (ContextCleaner reclaims it on GC); until_converged callers already
-    # own release via persisted_out.
+    # funnel 6.1 -> 3.5 s at sf0.1 with the persist).
     if rounds > 1 or until_converged:
-        e = e.persist()
-        if persisted_out is not None:
-            persisted_out.append(e)
+        e = persist(e)
     # Self-loop edges (round 6): with (x, x) in the edge set for every node,
     # min-over-neighborhood INCLUDES the node's own label, so a round is ONE
     # equi-join + ONE partial-aggregated min — the former second join
@@ -574,7 +561,7 @@ def near_dup_clusters(
             # just-unpersisted parent; max_rounds bounds plan depth (labels
             # lineage grows one join per round — a kmeans-style driver loop,
             # not an unbounded recursion)
-            new_labels = new_labels.persist()
+            new_labels = persist(new_labels)
             changed = (
                 new_labels.join(labels.withColumnRenamed("cluster_id", "old"), "doc_id")
                 .filter(F.col("cluster_id") != F.col("old"))
@@ -589,11 +576,4 @@ def near_dup_clusters(
             labels = new_labels
             if r >= rounds:
                 break
-    out = labels.withColumn("is_canonical", F.col("cluster_id") == F.col("doc_id"))
-    if until_converged:
-        if persisted_out is not None:
-            persisted_out.append(labels)
-        else:
-            out = out.localCheckpoint(eager=True)
-            labels.unpersist()
-    return out
+    return labels.withColumn("is_canonical", F.col("cluster_id") == F.col("doc_id"))

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import persist
+
 
 def pagerank(
     edges: DataFrame, n_iter: int = 3, damping: float = 0.85
@@ -33,22 +35,25 @@ def pagerank(
     # references `pr` twice (contribution join + dangling-mass anti-join),
     # doubling the unrolled subtree per iteration — the near_dup_clusters
     # pathology. Everything persisted here is vocab-grain (Zipf-small at
-    # any corpus size); caches ride the result frame's lineage.
-    edges = edges.persist()
+    # any corpus size). The round caches stay until the caller's owner
+    # releases them: the result is lazy, so every round is still needed.
+    edges = persist(edges)
     src_nodes = edges.select(F.col("src").alias("node"))
     dst_nodes = edges.select(F.col("dst").alias("node"))
-    nodes = src_nodes.unionByName(dst_nodes).distinct().persist()
+    nodes = persist(src_nodes.unionByName(dst_nodes).distinct())
     n_df = nodes.agg(F.count("*").cast("double").alias("n"))
-    outw = edges.groupBy("src").agg(F.sum("weight").alias("outw")).persist()
-    norm = edges.join(outw, "src").select(
-        "src", "dst", (F.col("weight") / F.col("outw")).alias("share")
-    ).persist()
+    outw = persist(edges.groupBy("src").agg(F.sum("weight").alias("outw")))
+    norm = persist(
+        edges.join(outw, "src").select(
+            "src", "dst", (F.col("weight") / F.col("outw")).alias("share")
+        )
+    )
     pr = nodes.crossJoin(F.broadcast(n_df)).select(
         "node", (F.lit(1.0) / F.col("n")).alias("pr")
     )
     d = float(damping)
     for _ in range(n_iter):
-        pr = pr.persist()
+        pr = persist(pr)
         contrib = (
             norm.join(pr.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))

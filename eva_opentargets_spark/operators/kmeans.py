@@ -24,6 +24,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import persist
+
 
 def _cents_sql(centroids) -> str | None:
     """The centroid list as ONE SQL array<array<double>> literal. Python
@@ -106,12 +108,14 @@ def kmeans(
     k x n_partitions x dim doubles)."""
     # Persist the (vid, e) projection for the loop: seeds + every Lloyd
     # iteration re-scans it (round 6; cast-from-parquet paid per job
-    # otherwise). CacheManager dedupes identical plans across invocations,
-    # so repeated kmeans() calls share one entry; K x dim doubles per row,
-    # MEMORY_AND_DISK.
-    v = embeddings.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("e")
-    ).persist()
+    # otherwise) — assign_cells builds the same plan, so it reads the cache.
+    # K x dim doubles per row, MEMORY_AND_DISK; released once the loop ends
+    # (on an exception, the caller's owner releases it).
+    v = persist(
+        embeddings.select(
+            F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("e")
+        )
+    )
     seed_rows = v.orderBy("vid").limit(k).collect()
     centroids = [list(r["e"]) for r in seed_rows]
     dim = len(centroids[0])
@@ -139,6 +143,7 @@ def kmeans(
         centroids = new_centroids
         if shift < tol:
             break
+    v.unpersist()
     return centroids, iters
 
 

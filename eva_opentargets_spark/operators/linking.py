@@ -6,13 +6,16 @@ zooma.py:84-126), then xref traversal (OxO analog, oxo.py:182-209), with
 the acceptance rules of cmat/trait_mapping/trait.py:56-81 and the
 obsolete-replacement chase of ols.py:111-134.
 
-Spark shape: every stage is a broadcast hash join between the (small,
-pre-deduplicated) distinct-mention table and the broadcast ontology
-dictionary; each stage's unresolved remainder flows to the next via
-left_anti joins (the priority-cascade pattern of
-cmat/consequence_prediction/repeat_expansion_variants/pipeline.py:95-162).
-No UDF is needed: scoring is JVM-side `levenshtein`, so the whole cascade
-stays inside whole-stage codegen.
+Spark shape: every stage joins the (small, pre-deduplicated)
+distinct-mention table against the broadcast ontology dictionary. Tiers 1+2
+(exact, normalized) are one fold-keyed join + aggregation whose filters
+give both tiers and the unresolved remainder; tiers 3-5 (fuzzy, xref,
+replacement) all read one candidate table and keep, per mention, the
+lowest tier that linked it (the priority-cascade pattern of
+cmat/consequence_prediction/repeat_expansion_variants/pipeline.py:95-162,
+without its anti-join ladder). Candidates are scored with JVM-side
+`levenshtein`, or, above ARROW_FUZZY_TERM_THRESHOLD dictionary terms, by
+the Arrow pandas UDF of fuzzy_udf.py.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from ..config import (
     PRED_CANONICAL,
     PRED_DIRECT,
 )
+from ..session import persist
 
 LINK_COLUMNS = ["mention_norm", "term_id", "match_type", "confidence", "pred"]
 
@@ -58,34 +62,6 @@ def label_surface(terms: DataFrame) -> DataFrame:
     return base.unionByName(syn)
 
 
-def link_exact(mentions: DataFrame, terms: DataFrame) -> DataFrame:
-    """J1 — exact-match dictionary join with the uniqueness rule.
-
-    Case-insensitive equality against current in-target labels AND synonyms;
-    a mention links only if it matches exactly ONE distinct term
-    (cmat/trait_mapping/ols.py:156-160: `len(candidates) == 1` — matching
-    the same term via label and synonym still counts as one).
-    min(term_id) is the deterministic representative (all term_ids are
-    equal when n == 1).
-    """
-    dict_df = _current_in_target(label_surface(terms)).select(
-        F.lower("label").alias("label_norm"), "term_id"
-    )
-    return (
-        mentions.join(F.broadcast(dict_df), F.col("mention_norm") == F.col("label_norm"), "inner")
-        .groupBy("mention_norm")
-        .agg(F.count_distinct("term_id").alias("n_terms"), F.min("term_id").alias("term_id"))
-        .filter(F.col("n_terms") == 1)
-        .select(
-            "mention_norm",
-            "term_id",
-            F.lit("exact").alias("match_type"),
-            F.lit("HIGH").alias("confidence"),
-            F.lit(PRED_DIRECT).alias("pred"),
-        )
-    )
-
-
 def _fold(col):
     """Normalization fold: lowercase, punctuation -> space, collapse
     whitespace (the SURVEY §7.2 'normalized match' tier: casefold +
@@ -93,27 +69,65 @@ def _fold(col):
     return F.trim(F.regexp_replace(F.regexp_replace(F.lower(col), r"[^a-z0-9 ]", " "), r"\s+", " "))
 
 
-def link_normalized(mentions: DataFrame, terms: DataFrame) -> DataFrame:
-    """Normalized-match tier: like J1 but on punctuation/whitespace-folded
-    strings, with the same uniqueness rule. Runs on the exact tier's
-    remainder; match_type='normalized' (FIXTURES.md §6)."""
-    dict_df = _current_in_target(label_surface(terms)).select(
-        _fold(F.col("label")).alias("label_fold"), "term_id"
+def exact_normalized_links(
+    mentions: DataFrame, terms: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """J1 + the normalized tier. Returns (exact, normalized, unresolved).
+
+    Exact: case-insensitive equality against current in-target labels AND
+    synonyms; a mention links only if it matches exactly ONE distinct term
+    (cmat/trait_mapping/ols.py:156-160: `len(candidates) == 1` — matching
+    the same term via label and synonym still counts as one). Normalized:
+    the same uniqueness rule on punctuation/whitespace-folded strings, for
+    mentions the exact tier left unlinked (FIXTURES.md §6). min(term_id)
+    is the deterministic representative (all term_ids are equal when
+    n == 1). `unresolved` holds the mentions neither tier linked.
+
+    Both tiers come from ONE broadcast join + aggregation. Exact equality
+    implies fold equality (the fold is a pure function of the string), so
+    a single join on the FOLDED key captures both tiers' match sets; per
+    mention, one aggregation counts distinct terms among exact-equal
+    matches and among all fold matches, and the tiers' uniqueness rules
+    read off those counts (n_exact >= 2 implies n_fold >= 2, so
+    "exact-unlinked AND fold-unique" is the normalized admission). The
+    join is LEFT: unmatched mentions keep a row with NULL term_id
+    (count_distinct ignores it -> n_fold = 0), so `unresolved` is a filter
+    of the same aggregate, which is persisted for its three consumers.
+    """
+    surface = _current_in_target(label_surface(terms)).select(
+        F.lower("label").alias("label_norm"), "term_id"
     )
-    return (
-        mentions.withColumn("mention_fold", _fold(F.col("mention_norm")))
-        .join(F.broadcast(dict_df), F.col("mention_fold") == F.col("label_fold"), "inner")
+    surface = surface.withColumn("label_fold", _fold(F.col("label_norm")))
+    is_exact = F.col("mention_norm") == F.col("label_norm")
+    tier12 = persist(
+        mentions.select("mention_norm")
+        .withColumn("mention_fold", _fold(F.col("mention_norm")))
+        .join(F.broadcast(surface), F.col("mention_fold") == F.col("label_fold"), "left")
         .groupBy("mention_norm")
-        .agg(F.count_distinct("term_id").alias("n_terms"), F.min("term_id").alias("term_id"))
-        .filter(F.col("n_terms") == 1)
-        .select(
-            "mention_norm",
-            "term_id",
-            F.lit("normalized").alias("match_type"),
-            F.lit("HIGH").alias("confidence"),
-            F.lit(PRED_DIRECT).alias("pred"),
+        .agg(
+            F.count_distinct(F.when(is_exact, F.col("term_id"))).alias("n_exact"),
+            F.min(F.when(is_exact, F.col("term_id"))).alias("exact_term"),
+            F.count_distinct("term_id").alias("n_fold"),
+            F.min("term_id").alias("fold_term"),
         )
     )
+
+    def _tier(term_col: str, match_type: str) -> list:
+        return [
+            "mention_norm",
+            F.col(term_col).alias("term_id"),
+            F.lit(match_type).alias("match_type"),
+            F.lit("HIGH").alias("confidence"),
+            F.lit(PRED_DIRECT).alias("pred"),
+        ]
+
+    exact = tier12.filter(F.col("n_exact") == 1).select(*_tier("exact_term", "exact"))
+    not_exact = F.col("n_exact") != 1
+    normalized = tier12.filter(not_exact & (F.col("n_fold") == 1)).select(
+        *_tier("fold_term", "normalized")
+    )
+    unresolved = tier12.filter(not_exact & (F.col("n_fold") != 1)).select("mention_norm")
+    return exact, normalized, unresolved
 
 
 def fuzzy_candidates(mentions: DataFrame, terms: DataFrame) -> DataFrame:
@@ -282,109 +296,46 @@ ARROW_FUZZY_TERM_THRESHOLD = 10_000
 
 
 def link_cascade(
-    distinct_mentions: DataFrame,
-    terms: DataFrame,
-    xrefs: DataFrame,
-    n_link_partitions: int = 1,
-    fuzzy_path: str = "auto",
+    distinct_mentions: DataFrame, terms: DataFrame, xrefs: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Full cascade. Returns (links, candidates, unresolved).
 
     Stage order and early-exit mirror main.py:34-75: exact-resolved mentions
     never reach the fuzzy stage, fuzzy-resolved never reach xref, etc. —
-    expressed as left_anti joins, so each stage's probe side shrinks.
+    tiers 1+2 are filters of one aggregate (exact_normalized_links) and
+    tiers 3-5 are resolved by precedence over one candidate table.
 
-    Scale shape: the distinct-mention table (the ONLY descendant of the big
-    transcript scan here) is persisted so the scan + extraction UDF runs
-    once, not once per cascade stage; every later table is dictionary-sized,
-    so each anti/semi join is broadcast-hinted — the whole cascade runs
-    without a single shuffle exchange.
+    Scale shape: every table after the distinct-mention input is
+    dictionary-sized, so each join is broadcast-hinted. The tier-1+2
+    aggregate, the candidate table and the links are persisted through
+    session.persist; the caller's Persisted owner releases them.
 
-    fuzzy_path: 'jvm' (broadcast levenshtein join), 'arrow' (length-band
-    pandas UDF), or 'auto' (arrow when the dictionary exceeds
-    ARROW_FUZZY_TERM_THRESHOLD terms — the broadcast-nested-loop stops being
-    sane around there).
-
-    The persisted intermediates are recorded on the returned links frame;
-    call :func:`unpersist_cascade` when done with a run to release them.
+    Fuzzy candidates come from the Arrow length-band UDF when the
+    dictionary exceeds ARROW_FUZZY_TERM_THRESHOLD terms (the broadcast
+    nested-loop join stops being sane around there), else from the JVM
+    broadcast levenshtein join.
     """
     # The distinct-mention table is dictionary-scale BY DESIGN (the A1
     # pre-aggregation already collapsed the corpus); coalesce it so every
     # cascade stage is a single-task job instead of shuffle-partition-many
-    # near-empty tasks. Raise n_link_partitions if distinct mentions ever
-    # reach the hundreds of millions.
-    mentions = (
-        distinct_mentions.select("mention_norm").coalesce(n_link_partitions).persist()
-    )
+    # near-empty tasks. Raise the 1 if distinct mentions ever reach the
+    # hundreds of millions.
+    mentions = distinct_mentions.select("mention_norm").coalesce(1)
+    exact, normalized, unresolved1 = exact_normalized_links(mentions, terms)
 
-    # --- Tiers 1+2 (exact, normalized) in ONE broadcast join + aggregation
-    # (round 6). Exact equality implies fold equality (the fold is a pure
-    # function of the string), so a single join on the FOLDED key captures
-    # both tiers' match sets; per mention, one aggregation counts distinct
-    # terms among exact-equal matches and among all fold matches, and the
-    # two tiers' uniqueness rules read off those counts. Row-identical to
-    # the former link_exact -> anti-join -> link_normalized chain (the
-    # normalized tier ran on the exact remainder; n_exact >= 2 implies
-    # n_fold >= 2, so "exact-unlinked AND fold-unique" is exactly the old
-    # admission), but the plan holds ONE dictionary join instead of two
-    # joins plus two broadcast anti-joins — and the logical plan stops
-    # doubling per tier, which is what made the old cascade's tree (and
-    # its analysis/optimization time) exponential in stage count.
-    surface = _current_in_target(label_surface(terms)).select(
-        F.lower("label").alias("label_norm"), "term_id"
-    )
-    surface = surface.withColumn("label_fold", _fold(F.col("label_norm")))
-    is_exact = F.col("mention_norm") == F.col("label_norm")
-    # LEFT join (round 6): unmatched mentions keep a row with NULL term_id
-    # (count_distinct ignores it -> n_fold = 0), so the unresolved
-    # remainder is a FILTER of this one aggregate — no anti-join, no extra
-    # broadcast build on the critical path.
-    tier12 = (
-        mentions.withColumn("mention_fold", _fold(F.col("mention_norm")))
-        .join(F.broadcast(surface), F.col("mention_fold") == F.col("label_fold"), "left")
-        .groupBy("mention_norm")
-        .agg(
-            F.count_distinct(F.when(is_exact, F.col("term_id"))).alias("n_exact"),
-            F.min(F.when(is_exact, F.col("term_id"))).alias("exact_term"),
-            F.count_distinct("term_id").alias("n_fold"),
-            F.min("term_id").alias("fold_term"),
-        )
-        .persist()
-    )
-
-    def _tier(term_col: str, match_type: str) -> list:
-        return [
-            "mention_norm",
-            F.col(term_col).alias("term_id"),
-            F.lit(match_type).alias("match_type"),
-            F.lit("HIGH").alias("confidence"),
-            F.lit(PRED_DIRECT).alias("pred"),
-        ]
-
-    exact = tier12.filter(F.col("n_exact") == 1).select(*_tier("exact_term", "exact"))
-    normalized = tier12.filter(
-        (F.col("n_exact") != 1) & (F.col("n_fold") == 1)
-    ).select(*_tier("fold_term", "normalized"))
-    unresolved1 = tier12.filter(
-        (F.col("n_exact") != 1) & (F.col("n_fold") != 1)
-    ).select("mention_norm")
-
-    if fuzzy_path == "auto":
-        # dictionary row count for the Arrow-vs-JVM gate, cached on the
-        # (memoized) terms frame so repeated cascade builds in one session
-        # pay the count job once
-        n_terms = getattr(terms, "_cascade_term_count", None)
-        if n_terms is None:
-            n_terms = terms.count()
-            terms._cascade_term_count = n_terms
-        fuzzy_path = "arrow" if n_terms > ARROW_FUZZY_TERM_THRESHOLD else "jvm"
-    if fuzzy_path == "arrow":
+    # dictionary row count for the Arrow-vs-JVM gate, cached on the
+    # (memoized) terms frame so repeated cascade builds in one session
+    # pay the count job once
+    n_terms = getattr(terms, "_cascade_term_count", None)
+    if n_terms is None:
+        n_terms = terms.count()
+        terms._cascade_term_count = n_terms
+    if n_terms > ARROW_FUZZY_TERM_THRESHOLD:
         from .fuzzy_udf import fuzzy_candidates_arrow
 
-        cands = fuzzy_candidates_arrow(unresolved1, terms)
-        cands = cands.persist()
+        cands = persist(fuzzy_candidates_arrow(unresolved1, terms))
     else:
-        cands = fuzzy_candidates(unresolved1, terms).persist()
+        cands = persist(fuzzy_candidates(unresolved1, terms))
 
     # --- Tiers 3-5 from the ONE persisted candidate table, with tier
     # PRECEDENCE as a window instead of an anti-join ladder (round 6):
@@ -411,22 +362,10 @@ def link_cascade(
         .select(*LINK_COLUMNS)
     )
 
-    links = (
-        exact.unionByName(normalized).unionByName(links345).select(*LINK_COLUMNS)
-    ).persist()
+    links = persist(exact.unionByName(normalized).unionByName(links345).select(*LINK_COLUMNS))
     # the final remainder is LAZY (only kg_unmapped/curation consumers
     # materialize it): unresolved1 minus every tier-3/4/5-linked mention
     unresolved4 = unresolved1.join(
         links345.select("mention_norm").distinct(), "mention_norm", "left_anti"
     )
-    # record what we persisted so callers can release executor memory after
-    # the run (round-1 verdict: the cascade leaked 6 persists per invocation)
-    links._cascade_persisted = [mentions, tier12, cands, links]
     return links, cands, unresolved4
-
-
-def unpersist_cascade(links: DataFrame) -> None:
-    """Release every DataFrame persisted by the link_cascade invocation that
-    produced `links` (no-op for frames not built by link_cascade)."""
-    for df in getattr(links, "_cascade_persisted", []):
-        df.unpersist()

@@ -20,6 +20,8 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import persist
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -375,9 +377,11 @@ def embedding_near_dups(
     tables = _nd_table_structs(n_tables, n_planes, dim)
     # persisted for the self-join's two sides (round 6): the n_tables x
     # n_planes in-row projections were otherwise computed twice per vector
-    buckets = v.select("vid", F.explode(F.array(*tables)).alias("tb")).select(
-        "vid", F.col("tb.t").alias("t"), F.col("tb.b").alias("b")
-    ).persist()
+    buckets = persist(
+        v.select("vid", F.explode(F.array(*tables)).alias("tb")).select(
+            "vid", F.col("tb.t").alias("t"), F.col("tb.b").alias("b")
+        )
+    )
     cands = (
         buckets.alias("a")
         .join(buckets.alias("c"), ["t", "b"])

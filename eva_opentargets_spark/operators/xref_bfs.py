@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import MAX_XREF_DISTANCE
+from ..session import persist
 
 
 def xref_closure(seeds: DataFrame, edges: DataFrame, max_distance: int = MAX_XREF_DISTANCE) -> DataFrame:
@@ -30,12 +31,11 @@ def xref_closure(seeds: DataFrame, edges: DataFrame, max_distance: int = MAX_XRE
     frontier = visited
     persisted = []
     for d in range(1, max_distance + 1):
-        nxt = (
+        nxt = persist(
             frontier.join(e, "node", "inner")
             .select("seed_id", F.col("nxt").alias("node"), F.lit(d).alias("distance"))
             .distinct()
             .join(visited.select("seed_id", "node"), ["seed_id", "node"], "left_anti")
-            .persist()
         )
         persisted.append(nxt)
         if nxt.isEmpty():

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import fixtures
 from .config import STOPLIST
 from .operators.curation import curation_table, merge_mapping_databases
-from .operators.linking import link_cascade, unpersist_cascade
+from .operators.linking import link_cascade
 from .operators.mentions import (
     distinct_mentions,
     distinct_mentions_with_stop_counts,
@@ -35,7 +35,10 @@ from .operators.mentions import (
     unique_per_turn,
 )
 from .operators.triples import emit_triples
+from .session import Persisted, persist
 from .sources.dictionary import demo_terms, demo_xrefs
+
+MATCH_TYPES = ("exact", "normalized", "fuzzy", "xref", "replacement")
 
 
 @dataclass
@@ -50,6 +53,7 @@ class PipelineResult:
     candidates: DataFrame
     unresolved: DataFrame
     triples: DataFrame
+    persisted: Persisted  # owner of every cache the run took
 
     @property
     def curation(self) -> DataFrame:
@@ -61,10 +65,9 @@ class PipelineResult:
         return self._curation
 
     def unpersist(self) -> None:
-        """Release the executor-memory footprint of a finished run (the
-        extracted cache + the dictionary-scale cascade persists)."""
-        self.extracted.unpersist()
-        unpersist_cascade(self.links)
+        """Release every cache the run took (the extracted table when
+        persisted, and the cascade's dictionary-scale tables)."""
+        self.persisted.release()
 
 
 def run_pipeline(
@@ -80,52 +83,53 @@ def run_pipeline(
     xrefs = xrefs if xrefs is not None else demo_xrefs(spark)
     vocabulary = vocabulary or fixtures.mention_vocabulary()
 
-    # ONE extraction definition that every downstream view derives from.
-    # persist_extracted=False by default: measured head-to-head, recomputing
-    # the extraction for the second consumer branch beats caching it — the
-    # columnar cache has no vectorized path for array<struct> columns, so
-    # cache build+read is SLOWER than the UDF recompute at >=8 cores
-    # (local[8], 2M turns: 46.7 s recompute vs 54.9 s cached; at local[32]
-    # the gap widens — the same pathology round 1 hit with the occurrence
-    # cache). At 100 TB the right move is materializing the extraction to a
-    # bucketed table between stages (the checkpoint runner does exactly
-    # that per wave), not executor-memory caching. persist_extracted=True
-    # remains available for low-core/memory-rich profiles, where halving
-    # the UDF passes wins (local[2]: 78.6 s cached vs 154.8 s recompute).
-    extracted = extract_turn_mentions(transcripts, vocabulary, include_invalid=True)
-    if persist_extracted:
-        extracted = extracted.persist()
+    with Persisted() as held:
+        # ONE extraction definition that every downstream view derives from.
+        # persist_extracted=False by default: measured head-to-head, recomputing
+        # the extraction for the second consumer branch beats caching it — the
+        # columnar cache has no vectorized path for array<struct> columns, so
+        # cache build+read is SLOWER than the UDF recompute at >=8 cores
+        # (local[8], 2M turns: 46.7 s recompute vs 54.9 s cached; at local[32]
+        # the gap widens — the same pathology round 1 hit with the occurrence
+        # cache). At 100 TB the right move is materializing the extraction to a
+        # bucketed table between stages (the checkpoint runner does exactly
+        # that per wave), not executor-memory caching. persist_extracted=True
+        # remains available for low-core/memory-rich profiles, where halving
+        # the UDF passes wins (local[2]: 78.6 s cached vs 154.8 s recompute).
+        extracted = extract_turn_mentions(transcripts, vocabulary, include_invalid=True)
+        if persist_extracted:
+            extracted = persist(extracted)
 
-    mentions_all = occurrences(extracted, drop_stoplisted=False)
-    mentions = mentions_all.filter(~F.col("mention_norm").isin(*sorted(STOPLIST)))
-    # A1 pre-agg. distinct_all (stoplisted rows retained, hot keys guarded —
-    # see distinct_mentions_with_stop_counts) is a LAZY side view for
-    # callers that want the spilled phase table; the cascade probes
-    # `distinct` directly so the triples hot path stays on the PRUNED
-    # aggregation — the cascade only consumes mention_norm, and Catalyst
-    # collapses the groupBy to a bare distinct-keys aggregate with no
-    # count_distinct expansion. (Round-3 measured: persisting the full
-    # 3-aggregate distinct_all inside the cascade chain forced the x3
-    # Expand over every occurrence into the flagship path — 10,300 ->
-    # 6,400 turns/sec. Metrics pay one extra dictionary-scale job instead;
-    # see compute_metrics.)
-    distinct_all = distinct_mentions_with_stop_counts(mentions_all)
-    if spill_dir:
-        # S6 phase boundary (reference trait_mapping/main.py:78-97): the
-        # parse phase materializes the distinct-mention table to storage and
-        # the process phase (cascade) reads the file back.
-        from .plans.checkpoint import spill_reload
+        mentions_all = occurrences(extracted, drop_stoplisted=False)
+        mentions = mentions_all.filter(~F.col("mention_norm").isin(*sorted(STOPLIST)))
+        # A1 pre-agg. distinct_all (stoplisted rows retained, hot keys guarded —
+        # see distinct_mentions_with_stop_counts) is a LAZY side view for
+        # callers that want the spilled phase table; the cascade probes
+        # `distinct` directly so the triples hot path stays on the PRUNED
+        # aggregation — the cascade only consumes mention_norm, and Catalyst
+        # collapses the groupBy to a bare distinct-keys aggregate with no
+        # count_distinct expansion. (Round-3 measured: persisting the full
+        # 3-aggregate distinct_all inside the cascade chain forced the x3
+        # Expand over every occurrence into the flagship path — 10,300 ->
+        # 6,400 turns/sec. Metrics pay one extra dictionary-scale job instead;
+        # see compute_metrics.)
+        distinct_all = distinct_mentions_with_stop_counts(mentions_all)
+        if spill_dir:
+            # S6 phase boundary (reference trait_mapping/main.py:78-97): the
+            # parse phase materializes the distinct-mention table to storage and
+            # the process phase (cascade) reads the file back.
+            from .plans.checkpoint import spill_reload
 
-        distinct_all = spill_reload(distinct_all, f"{spill_dir}/distinct_mentions")
-        distinct = distinct_all.filter(~F.col("mention_norm").isin(*sorted(STOPLIST)))
-    else:
-        distinct = distinct_mentions(mentions)
-    links, candidates, unresolved = link_cascade(distinct, terms, xrefs)
-    # shuffle-free triple path: per-turn uniqueness established inside the
-    # extraction row (array_distinct on the same ms column), not via a
-    # cluster-wide dropDuplicates
-    per_turn = unique_per_turn(extracted)
-    triples = emit_triples(per_turn, links, unique_per_turn=True)
+            distinct_all = spill_reload(distinct_all, f"{spill_dir}/distinct_mentions")
+            distinct = distinct_all.filter(~F.col("mention_norm").isin(*sorted(STOPLIST)))
+        else:
+            distinct = distinct_mentions(mentions)
+        links, candidates, unresolved = link_cascade(distinct, terms, xrefs)
+        # shuffle-free triple path: per-turn uniqueness established inside the
+        # extraction row (array_distinct on the same ms column), not via a
+        # cluster-wide dropDuplicates
+        per_turn = unique_per_turn(extracted)
+        triples = emit_triples(per_turn, links, unique_per_turn=True)
     return PipelineResult(
         transcripts=transcripts,
         extracted=extracted,
@@ -137,6 +141,7 @@ def run_pipeline(
         candidates=candidates,
         unresolved=unresolved,
         triples=triples,
+        persisted=held,
     )
 
 
@@ -157,11 +162,11 @@ def compute_metrics(
     THRESHOLD): above the gate, triples_emitted switches to the join form
     sum(freq x fanout) over the distinct-mention table — freq counts
     distinct (conv, turn) pairs per mention, so that sum IS the
-    per-turn-distinct triple count. mentions_distinct comes from the
-    cascade's own persisted mentions frame (round-2 verdict #2: counting
-    result.distinct re-ran the extraction); unmapped derives from persisted
-    cascade tables. Standalone cost: the cascade scan + this one agg; in the
-    wave runner both read the cached extraction — one corpus scan total.
+    per-turn-distinct triple count. The link-grain counters come from
+    :func:`link_counters` over the cascade's tables, so counting them never
+    re-runs the extraction (round-2 verdict #2). Standalone cost: the
+    cascade scan + this one agg; in the wave runner both read the cached
+    extraction — one corpus scan total.
     """
     from .config import MAPPING_LITERAL_THRESHOLD
 
@@ -218,20 +223,37 @@ def compute_metrics(
         # link-grain counters are NOT additive across disjoint corpus waves
         # (the same mention can resolve in several waves) — wave callers pass
         # corpus_only=True and compute these once from the global cascade.
-        persisted = getattr(result.links, "_cascade_persisted", None)
-        dm = persisted[0] if persisted else result.distinct
-        counters.insert(5, ("mentions_distinct", dm.count()))
-        counters.insert(6, ("unmapped", result.unresolved.count()))
-        by_type = {
-            r["match_type"]: r["n"]
-            for r in result.links.select("mention_norm", "match_type")
-            .distinct()
-            .groupBy("match_type")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        for mt in ("exact", "normalized", "fuzzy", "xref", "replacement"):
-            counters.append((f"linked_{mt}", int(by_type.get(mt, 0))))
+        counters += link_counters(result.links, result.unresolved)
+    return counter_frame(spark, run_id, partition, counters)
+
+
+def link_counters(links: DataFrame, unresolved: DataFrame) -> list[tuple[str, int]]:
+    """Link-grain counters of one cascade run: linked_<tier> (distinct
+    mentions per match type), unmapped, and mentions_distinct. Every
+    distinct mention lands in exactly one tier or in the unresolved
+    remainder — exact and normalized are exclusive filters of one
+    aggregate and tiers 3-5 keep each mention's lowest tier — so
+    mentions_distinct is their sum, not another count job."""
+    by_type = {
+        r["match_type"]: r["n"]
+        for r in links.select("mention_norm", "match_type")
+        .distinct()
+        .groupBy("match_type")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    linked = [(f"linked_{mt}", int(by_type.get(mt, 0))) for mt in MATCH_TYPES]
+    unmapped = unresolved.count()
+    return [
+        ("mentions_distinct", sum(n for _, n in linked) + unmapped),
+        ("unmapped", unmapped),
+        *linked,
+    ]
+
+
+def counter_frame(
+    spark: SparkSession, run_id: str, partition: str, counters: list[tuple[str, int]]
+) -> DataFrame:
     rows = [(run_id, partition, k, int(v)) for k, v in counters]
     return spark.createDataFrame(rows, "run_id string, partition string, counter string, value long")
 
@@ -250,6 +272,7 @@ __all__ = [
     "PipelineResult",
     "run_pipeline",
     "compute_metrics",
+    "link_counters",
     "mappings_from_links",
     "merge_mapping_databases",
     "turn_filter",

@@ -17,12 +17,7 @@ from .config import STOPLIST
 from .functions.text import fingerprint, quality_score
 from .operators import dedup, events, similarity
 from .operators.curation import rank_candidates
-from .operators.linking import (
-    fuzzy_candidates,
-    link_cascade,
-    link_exact,
-    link_normalized,
-)
+from .operators.linking import exact_normalized_links, fuzzy_candidates, link_cascade
 from .operators.mentions import distinct_mentions, extract_mentions, valid_turns
 from .pipeline import compute_metrics, mappings_from_links, merge_mapping_databases, run_pipeline
 from .sources.dictionary import demo_previous_mappings, demo_terms, demo_xrefs
@@ -62,14 +57,13 @@ def kg_distinct_mentions(spark, sf_dir):
 
 
 def kg_exact_links(spark, sf_dir):
-    return link_exact(kg_distinct_mentions(spark, sf_dir), demo_terms(spark))
+    exact, _, _ = exact_normalized_links(kg_distinct_mentions(spark, sf_dir), demo_terms(spark))
+    return exact
 
 
 def kg_fuzzy_candidates(spark, sf_dir):
-    dm = kg_distinct_mentions(spark, sf_dir)
     terms = demo_terms(spark)
-    unresolved = dm.join(link_exact(dm, terms), "mention_norm", "left_anti")
-    unresolved = unresolved.join(link_normalized(unresolved, terms), "mention_norm", "left_anti")
+    _, _, unresolved = exact_normalized_links(kg_distinct_mentions(spark, sf_dir), terms)
     return fuzzy_candidates(unresolved, terms).select(
         "mention_norm", "term_id", "label_norm", "in_ontology", "is_current", "lev", "confidence"
     )

@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, and the engine's one
+cache lifecycle (:func:`persist` + :class:`Persisted`).
 
 Defaults target the sandbox (local[N], 128 GiB) but every knob is the one
 you would set on a 1000-executor cluster: AQE on (runtime re-plan +
@@ -10,7 +11,49 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# Owners open on the driver, innermost last. The engine builds plans from
+# one driver thread, so the stack is not guarded by a lock.
+_open_owners: list[Persisted] = []
+
+
+class Persisted:
+    """Owner of the frames persisted while it is open.
+
+    The unit of work that runs a plan (a pipeline run, a wave, a bench
+    query) builds it inside ``with Persisted() as held:``, which collects
+    every frame :func:`persist` caches there (nested owners each collect
+    it), and calls ``held.release()`` once its outputs are materialized.
+    Leaving the block releases nothing, so the owner can outlive the code
+    that built the frames. CacheManager holds strong references: a cache
+    nobody releases stays for the life of the session.
+    """
+
+    def __init__(self):
+        self.frames: list[DataFrame] = []
+
+    def __enter__(self) -> Persisted:
+        _open_owners.append(self)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        _open_owners.remove(self)
+
+    def release(self) -> None:
+        # newest first: a cache released before the caches built over it
+        # would make Spark re-plan those dependants for nothing
+        while self.frames:
+            self.frames.pop().unpersist()
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, registered with every open :class:`Persisted`.
+    Outside any owner the cache stays until someone unpersists it."""
+    df = df.persist()
+    for owner in _open_owners:
+        owner.frames.append(df)
+    return df
 
 
 def estimated_input_splits(df) -> int:
@@ -67,7 +110,7 @@ def get_spark(
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Let AQE re-partition CACHED plans too (off by default): the round-6
-        # lineage-held persists (bpe vocab, band/fingerprint tables, cascade
+        # persists (bpe vocab, band/fingerprint tables, cascade
         # aggregates, propagation rounds) otherwise materialize at
         # initialPartitionNum granularity no matter how small the data is —
         # the 31-row BPE vocab cached as 256 partitions, so every merge-round
@@ -75,10 +118,7 @@ def get_spark(
         # the cached plan by DATA (same advisory target as any shuffle), so
         # dictionary-scale caches collapse to 1 task and corpus-scale caches
         # keep their parallelism at any SF.
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_CACHED_PLAN_AQE", "true"),
-        )
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")

@@ -6,14 +6,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from eva_opentargets_spark.operators.linking import (
+    exact_normalized_links,
     fuzzy_candidates,
     link_cascade,
-    link_exact,
     link_fuzzy,
     link_replacement,
     link_xref,
     xref_gate,
 )
+from eva_opentargets_spark.pipeline import MATCH_TYPES, link_counters
 
 
 def _mentions(spark, names):
@@ -23,7 +24,8 @@ def _mentions(spark, names):
 def test_exact_unambiguous(spark, terms):
     # J1 — uniqueness rule (ols.py:158-160): 'spark' -> 1 IRI, accepted;
     # 'merge' -> 2 IRIs, rejected.
-    links = {r.mention_norm: r for r in link_exact(_mentions(spark, ["spark", "merge"]), terms).collect()}
+    exact, _, _ = exact_normalized_links(_mentions(spark, ["spark", "merge"]), terms)
+    links = {r.mention_norm: r for r in exact.collect()}
     assert links["spark"].term_id == "EFO:0001"
     assert links["spark"].match_type == "exact"
     assert "merge" not in links
@@ -32,7 +34,8 @@ def test_exact_unambiguous(spark, terms):
 def test_exact_skips_obsolete_and_foreign(spark, terms):
     # exact matching searches only current in-target terms (ols.py:139-147
     # queries the target ontology; obsolete handled downstream)
-    links = link_exact(_mentions(spark, ["slow", "vector"]), terms).collect()
+    exact, _, _ = exact_normalized_links(_mentions(spark, ["slow", "vector"]), terms)
+    links = exact.collect()
     assert links == []
 
 
@@ -98,6 +101,18 @@ def test_cascade_early_exit_and_partition(spark, terms, xrefs):
     # mapped + unmapped partition the input (test_main.py:58-65 analog)
     linked = {m for m, _ in got}
     assert linked | un == set(names) and not linked & un
+
+
+def test_link_counters_sum_to_distinct_mentions(spark, terms, xrefs):
+    # mentions_distinct is derived as sum(linked_*) + unmapped; on a
+    # dictionary reaching all five tiers it must equal a direct count
+    names = ["spark", "merge", "slow", "vector", "dup", "query", "batch", "batch"]
+    dm = _mentions(spark, names).groupBy("mention_norm").agg(F.count("*").alias("freq"))
+    links, _, unresolved = link_cascade(dm, terms, xrefs)
+    counters = dict(link_counters(links, unresolved))
+    assert all(counters[f"linked_{mt}"] > 0 for mt in MATCH_TYPES)
+    assert counters["unmapped"] > 0
+    assert counters["mentions_distinct"] == dm.select("mention_norm").distinct().count()
 
 
 @pytest.mark.parametrize(

@@ -14,6 +14,7 @@ import random
 from pyspark.sql import functions as F
 
 from eva_opentargets_spark.operators import dedup
+from eva_opentargets_spark.session import Persisted
 
 
 def test_pigeonhole_hamming_complete_on_random_fingerprints(spark):
@@ -118,15 +119,8 @@ def test_label_propagation_matches_python_connected_components(spark):
 
         docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id int")
         pairs = spark.createDataFrame(sorted(edges), "doc_a int, doc_b int")
-        # explicit-handle contract: the caller owns the converged frame's
-        # cache lifetime (round-4 ADVICE #1 — no attribute side-channel)
-        handles: list = []
-        got = {
-            r.doc_id: r.cluster_id
-            for r in dedup.near_dup_clusters(
-                docs, pairs, until_converged=True, persisted_out=handles
-            ).collect()
-        }
-        for h in handles:
-            h.unpersist()
+        with Persisted() as held:
+            clusters = dedup.near_dup_clusters(docs, pairs, until_converged=True)
+        got = {r.doc_id: r.cluster_id for r in clusters.collect()}
+        held.release()
         assert got == expected, f"seed {seed}"

@@ -60,8 +60,8 @@ def build_terms(spark, n: int):
 
 def build_mentions(spark, n: int = 1000, vocab: int = 100_000):
     # mentions are dictionary words with 0-2 character edits -> realistic
-    # fuzzy hit rates at every dictionary size; 8 partitions like the
-    # production distinct-mention table (n_link_partitions)
+    # fuzzy hit rates at every dictionary size; 8 partitions so both
+    # candidate paths run parallel tasks
     rows = []
     for i in range(n):
         w = pseudo_word((i * 7919) % vocab)
