@@ -1,173 +1,6 @@
-"""Arrow-backed fuzzy candidate scoring (the north_star's 'ontology
-dictionary broadcast as an Arrow-backed lookup' pattern).
+"""Compatibility alias: fuzzy candidates come from the signature join in
+operators/linking.py, for every dictionary size. Nothing in the engine
+imports this module; it keeps the old `fuzzy_candidates_arrow` name
+importable for callers that still patch it."""
 
-Semantically IDENTICAL to the JVM path (operators/linking.py:
-fuzzy_candidates — Levenshtein with the per-mention threshold and
-HIGH/GOOD/MEDIUM tiers); tests assert row-for-row equality. Use this path
-when the dictionary is too large for a broadcast-nested-loop join to be
-sane: the dictionary ships to each executor ONCE (task closure / Arrow
-batch), is indexed by length band in Python, and each distinct mention only
-scores against its candidate band — O(|mentions| x band) instead of
-O(|mentions| x |dictionary|).
-
-Because it runs on the DISTINCT-mention table (A1 pre-aggregation), the
-Python work is dictionary-scale, not corpus-scale.
-"""
-
-from __future__ import annotations
-
-from collections import defaultdict
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-from ..config import FUZZY_MAX_LEV, FUZZY_MIN_LEN_SLACK
-
-CANDIDATE = ArrayType(
-    StructType(
-        [
-            StructField("term_id", StringType(), False),
-            StructField("label_norm", StringType(), False),
-            StructField("in_ontology", BooleanType(), False),
-            StructField("is_current", BooleanType(), False),
-            StructField("is_obsolete", BooleanType(), False),
-            StructField("replaced_by", StringType(), True),
-            StructField("lev", IntegerType(), False),
-        ]
-    )
-)
-
-
-def _levenshtein(a: str, b: str) -> int:
-    """Classic DP, same semantics as Spark's levenshtein()."""
-    if a == b:
-        return 0
-    if len(a) < len(b):
-        a, b = b, a
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
-def _codes(s: str) -> np.ndarray:
-    """Unicode codepoints as int32 (matches Python/JVM per-char equality)."""
-    return np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int32)
-
-
-def _lev_batch(m_codes: np.ndarray, mat: np.ndarray) -> np.ndarray:
-    """Levenshtein(m, label) for EVERY row of `mat` (k labels x L chars) at
-    once: the classic DP with the j-loop kept sequential (the insertion term
-    depends on cur[j-1]) but every numpy op vectorized over the k labels —
-    ~50-100x over per-pair Python DP, no native lib needed."""
-    n = m_codes.shape[0]
-    k, L = mat.shape
-    prev = np.broadcast_to(np.arange(L + 1, dtype=np.int32), (k, L + 1)).copy()
-    cur = np.empty_like(prev)
-    for i in range(1, n + 1):
-        cur[:, 0] = i
-        neq = mat != m_codes[i - 1]
-        for j in range(1, L + 1):
-            cur[:, j] = np.minimum(
-                np.minimum(prev[:, j] + 1, cur[:, j - 1] + 1),
-                prev[:, j - 1] + neq[:, j - 1],
-            )
-        prev, cur = cur, prev
-    return prev[:, L]
-
-
-def make_fuzzy_udf(term_rows: list[dict]):
-    """term_rows: dicts with term_id, label, in_target_ontology, is_obsolete,
-    replaced_by. The length-band index (numpy codepoint matrix per label
-    length + parallel metadata lists) is built once per executor process
-    (closure capture; Arrow moves only the mention batches)."""
-    by_len: dict[int, list] = defaultdict(list)
-    for t in term_rows:
-        variants = [t["label"]] + list(t.get("synonyms") or [])
-        for v in variants:
-            label_norm = v.lower()
-            entry = (
-                t["term_id"],
-                label_norm,
-                bool(t["in_target_ontology"]),
-                bool(t["in_target_ontology"]) and not t["is_obsolete"],
-                bool(t["is_obsolete"]),
-                t.get("replaced_by"),
-            )
-            by_len[len(label_norm)].append(entry)
-    index: dict[int, tuple[np.ndarray, list]] = {}
-    for length, entries in by_len.items():
-        if length == 0:
-            continue
-        mat = np.empty((len(entries), length), dtype=np.int32)
-        for r, e in enumerate(entries):
-            mat[r] = _codes(e[1])
-        index[length] = (mat, entries)
-
-    @F.pandas_udf(CANDIDATE)
-    def score(mentions: pd.Series) -> pd.Series:
-        out = []
-        for m in mentions:
-            max_lev = min(FUZZY_MAX_LEV, max(0, len(m) - FUZZY_MIN_LEN_SLACK))
-            m_codes = _codes(m)
-            hits = []
-            for length in range(len(m) - max_lev, len(m) + max_lev + 1):
-                band = index.get(length)
-                if band is None:
-                    continue
-                mat, entries = band
-                levs = _lev_batch(m_codes, mat)
-                for r in np.nonzero(levs <= max_lev)[0]:
-                    term_id, label, in_ont, cur, obs, rep = entries[r]
-                    hits.append(
-                        {
-                            "term_id": term_id,
-                            "label_norm": label,
-                            "in_ontology": in_ont,
-                            "is_current": cur,
-                            "is_obsolete": obs,
-                            "replaced_by": rep,
-                            "lev": int(levs[r]),
-                        }
-                    )
-            out.append(hits)
-        return pd.Series(out)
-
-    return score
-
-
-def fuzzy_candidates_arrow(mentions: DataFrame, terms: DataFrame) -> DataFrame:
-    """Drop-in twin of linking.fuzzy_candidates with the scoring in an
-    Arrow-batched pandas UDF over a closure-shipped dictionary index."""
-    cols = ["term_id", "label", "in_target_ontology", "is_obsolete", "replaced_by"]
-    if "synonyms" in terms.columns:
-        cols.append("synonyms")
-    term_rows = [r.asDict() for r in terms.select(*cols).collect()]
-    udf = make_fuzzy_udf(term_rows)
-    exploded = mentions.select(
-        "mention_norm", F.explode(udf(F.col("mention_norm"))).alias("c")
-    )
-    lev = F.col("c.lev")
-    return exploded.select(
-        "mention_norm",
-        F.col("c.term_id").alias("term_id"),
-        F.col("c.label_norm").alias("label_norm"),
-        F.col("c.in_ontology").alias("in_ontology"),
-        F.col("c.is_current").alias("is_current"),
-        F.col("c.is_obsolete").alias("is_obsolete"),
-        F.col("c.replaced_by").alias("replaced_by"),
-        lev.alias("lev"),
-        F.when(lev <= 1, "HIGH").when(lev == 2, "GOOD").otherwise("MEDIUM").alias("confidence"),
-    )
+from .linking import fuzzy_candidates as fuzzy_candidates_arrow  # noqa: F401

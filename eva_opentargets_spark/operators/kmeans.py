@@ -27,13 +27,27 @@ from pyspark.sql import DataFrame, functions as F
 from ..session import persist
 
 
+# Squared L2 distance from the row's vector `e` to a centroid `c`, as SQL:
+# the one fragment assign_cells and ivf_kmeans_topk both parse, so the two
+# stay bit-identical to each other and to the _sq_dist lambda build.
+_SQ_DIST_SQL = "aggregate(zip_with(e, c, (x, y) -> (x-y)*(x-y)), 0.0D, (acc, v) -> acc + v)"
+
+
 def _cents_sql(centroids) -> str | None:
     """The centroid list as ONE SQL array<array<double>> literal. Python
     repr round-trips doubles exactly and the D suffix keeps the parser in
     DoubleType, so the literal carries the same values the lambda-built
     form would. Returns None when any value is non-finite (SQL literals
     can't spell NaN/Infinity) — callers fall back to the per-centroid
-    expression build."""
+    expression build. Raises ValueError on an empty centroid list or on
+    centroids of different (or zero) dimension: neither form has a
+    meaningful argmin there."""
+    dims = {len(c) for c in centroids}
+    if not centroids or 0 in dims or len(dims) > 1:
+        raise ValueError(
+            f"centroids must be a non-empty list of equal-length, non-empty vectors; "
+            f"got {len(centroids)} centroids of dimensions {sorted(dims)}"
+        )
     if not all(math.isfinite(x) for c in centroids for x in c):
         return None
     return (
@@ -78,10 +92,7 @@ def assign_cells(
         # literals. Same ZipWith/Aggregate ops in the same order, so the
         # floating-point result is bit-identical (pinned by
         # tests/test_kmeans equality case).
-        dists = F.expr(
-            f"transform({cs}, c -> aggregate(zip_with(e, c, (x, y) -> (x-y)*(x-y)),"
-            " 0.0D, (acc, v) -> acc + v))"
-        )
+        dists = F.expr(f"transform({cs}, c -> {_SQ_DIST_SQL})")
     else:
         dists = F.array(*[_sq_dist(F.col("e"), c) for c in centroids])
     # argmin with lowest-index tie-break: array_position finds the FIRST
@@ -199,9 +210,7 @@ def ivf_kmeans_topk(
         # same single-parse discipline as assign_cells: transform's index
         # lambda gives the 0-based cell id the enumerate() literal carried
         ranked_cells = F.expr(
-            f"array_sort(transform({cs}, (c, i) -> struct("
-            "aggregate(zip_with(e, c, (x, y) -> (x-y)*(x-y)), 0.0D,"
-            " (acc, v) -> acc + v) AS d, i AS cell)))"
+            f"array_sort(transform({cs}, (c, i) -> struct({_SQ_DIST_SQL} AS d, i AS cell)))"
         )
     else:
         ranked_cells = F.array_sort(

@@ -13,14 +13,15 @@ give both tiers and the unresolved remainder; tiers 3-5 (fuzzy, xref,
 replacement) all read one candidate table and keep, per mention, the
 lowest tier that linked it (the priority-cascade pattern of
 cmat/consequence_prediction/repeat_expansion_variants/pipeline.py:95-162,
-without its anti-join ladder). Candidates are scored with JVM-side
-`levenshtein`, or, above ARROW_FUZZY_TERM_THRESHOLD dictionary terms, by
-the Arrow pandas UDF of fuzzy_udf.py.
+without its anti-join ladder). Candidates come from one pigeonhole
+signature equi-join verified with JVM-side `levenshtein`
+(fuzzy_candidates); tiers 4+5 are one join of the candidates with a
+canonical-edge table of xrefs and replacements (link_canonical).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..config import (
     ACCEPT_XREF_DISTANCE,
@@ -130,29 +131,53 @@ def exact_normalized_links(
     return exact, normalized, unresolved
 
 
+def _segments(length):
+    """Pigeonhole segment count of a string of `length` code points:
+    FUZZY_MAX_LEV + 1, so that any FUZZY_MAX_LEV edits leave one segment
+    intact. Strings shorter than that get one segment per character (they
+    only ever match at lev 0, see fuzzy_candidates) and the empty string
+    one empty segment, so `sequence(0, segments - 1)` never counts down."""
+    return F.greatest(F.lit(1), F.least(F.lit(FUZZY_MAX_LEV + 1), length))
+
+
+def _segment_bounds(i, length, segments) -> tuple:
+    """(0-based start, length) of segment i when `length` code points are
+    cut into `segments` near-equal pieces."""
+    start = (i * length / segments).cast("int")
+    end = ((i + 1) * length / segments).cast("int")
+    return start, end - start
+
+
 def fuzzy_candidates(mentions: DataFrame, terms: DataFrame) -> DataFrame:
     """J2 — candidate generation (ZOOMA analog). The reference consumes an
     external service's candidates; this engine defines them natively:
     Levenshtein distance between the mention and every dictionary label,
     admitted when lev <= least(FUZZY_MAX_LEV, greatest(0, length(mention) - 4)).
+    `mentions` holds one row per mention_norm (the distinct-mention table).
 
     Confidence tiers (ZoomaConfidence analog, zooma.py:12-29):
     lev<=1 -> HIGH, lev==2 -> GOOD, lev==3 -> MEDIUM.
     in_ontology / is_current carry the OLS semantics of zooma.py:109-124
     (is_current is only meaningful for in-target terms).
 
-    Scale note: the join carries a length-band pre-filter
-    (|len(m)-len(label)| <= lev bound, a Levenshtein lower bound) so Catalyst
-    can avoid the full cartesian blow-up on large dictionaries; it never
-    changes results.
+    Scale shape: an exact signature equi-join (the pigeonhole partition
+    filter of MF-Join / segment index, PAPERS.md), not a cross join. Each
+    surface label of length L is cut into s = _segments(L) segments and
+    indexed as (L, i, segment). A mention of length n with
+    bound k can only match labels with L in [n-k, n+k], and any alignment
+    with <= k < s edits leaves some segment i verbatim in the mention,
+    moved by a shift d with |d| + |(n-L) - d| <= k (the edits before it
+    account for d, those after for the rest of the length gap). Each mention
+    emits those substrings, the broadcast index is probed on (L, i,
+    segment), the hits are deduplicated to distinct (mention, label) pairs
+    and verified with `levenshtein`, and the surface joins back on the
+    label string, so label/synonym rows that repeat keep their
+    multiplicity. Short labels need no special case: k > 0 forces
+    L >= n - k >= 4 = s, and at k = 0 one intact character segment is enough.
+    Lengths and substrings count code points on both sides.
     """
-    m = mentions.select("mention_norm").withColumn(
-        "max_lev",
-        F.least(
-            F.lit(FUZZY_MAX_LEV),
-            F.greatest(F.lit(0), F.length("mention_norm") - F.lit(FUZZY_MIN_LEN_SLACK)),
-        ),
-    )
+    n = F.length("mention_norm")
+    k = F.least(F.lit(FUZZY_MAX_LEV), F.greatest(F.lit(0), n - F.lit(FUZZY_MIN_LEN_SLACK)))
     t = label_surface(terms).select(
         "term_id",
         F.lower("label").alias("label_norm"),
@@ -161,17 +186,45 @@ def fuzzy_candidates(mentions: DataFrame, terms: DataFrame) -> DataFrame:
         "is_obsolete",
         "replaced_by",
     )
-    # Join ONLY on the cheap length-band lower bound; Levenshtein is computed
-    # once, in the projection, and the real threshold is applied as a
-    # post-join filter. (Putting levenshtein in the join predicate AND the
-    # projection makes Catalyst evaluate it twice — no CSE across join
-    # condition and project.)
-    joined = m.join(
-        F.broadcast(t),
-        F.abs(F.length("mention_norm") - F.length("label_norm")) <= F.col("max_lev"),
-        "inner",
-    ).withColumn("lev", F.levenshtein("mention_norm", "label_norm"))
-    return joined.filter(F.col("lev") <= F.col("max_lev")).select(
+
+    L, i = F.col("L"), F.col("i")
+    start, seg_len = _segment_bounds(i, L, _segments(L))
+    segment_ids = F.explode(F.sequence(F.lit(0), _segments(L) - 1)).alias("i")
+
+    # the index: one row per (surface label, segment); a label string that
+    # repeats only repeats hits, which the pair dedup below collapses
+    index = (
+        t.filter(F.col("label_norm").isNotNull())
+        .select("label_norm", F.length("label_norm").alias("L"))
+        .select("*", segment_ids)
+        .select("L", "i", F.substring("label_norm", start + 1, seg_len).alias("seg"), "label_norm")
+    )
+
+    # the probes: every substring that could be segment i of a label of
+    # length L within the mention's bound, at every admissible shift
+    gap = F.col("n") - L
+    slack = ((F.col("max_lev") - F.abs(gap)) / 2).cast("int")
+    shifts = F.sequence(F.least(F.lit(0), gap) - slack, F.greatest(F.lit(0), gap) + slack)
+    at, width = F.col("start") + F.col("shift"), F.col("width")
+    probes = (
+        mentions.select("mention_norm", n.alias("n"), k.alias("max_lev"))
+        .select("*", F.explode(F.sequence(n - k, n + k)).alias("L"))
+        .select("*", segment_ids)
+        .select("*", start.alias("start"), seg_len.alias("width"), F.explode(shifts).alias("shift"))
+        .filter((at >= 0) & (at + width <= F.col("n")))
+        .select("mention_norm", "max_lev", "L", "i",
+                F.substring("mention_norm", at + 1, width).alias("seg"))
+    )
+
+    pairs = (
+        probes.join(F.broadcast(index), ["L", "i", "seg"])
+        .select("mention_norm", "max_lev", "label_norm")
+        .distinct()
+        # the banded form returns -1 past FUZZY_MAX_LEV instead of finishing the DP
+        .withColumn("lev", F.levenshtein("mention_norm", "label_norm", FUZZY_MAX_LEV))
+        .filter(F.col("lev").between(0, F.col("max_lev")))
+    )
+    return pairs.join(F.broadcast(t), "label_norm").select(
         "mention_norm",
         "term_id",
         "label_norm",
@@ -212,87 +265,56 @@ def link_fuzzy(candidates: DataFrame) -> DataFrame:
     )
 
 
-def xref_gate(candidates: DataFrame) -> DataFrame:
-    """Mentions eligible for xref traversal (cmat/trait_mapping/main.py:59-63):
-    they must HAVE candidates but NONE of them current."""
+def _canonical_edges(terms: DataFrame, xrefs: DataFrame) -> DataFrame:
+    """The tier-4/5 edge table (src, dst, tier), restricted to current
+    in-target destinations (trait.py:69-81, ols.py:111-134):
+    * tier 4 — xref edges at ACCEPT_XREF_DISTANCE (OxO analog; bounded
+      multi-hop traversal lives in operators/xref_bfs.py);
+    * tier 5 — obsolete term -> its replaced_by term (depth 1)."""
+    xref = xrefs.filter(F.col("distance") == ACCEPT_XREF_DISTANCE).select(
+        F.col("src_curie").alias("src"), F.col("dst_curie").alias("dst"), F.lit(4).alias("tier")
+    )
+    replacement = terms.filter(F.col("is_obsolete") & F.col("replaced_by").isNotNull()).select(
+        F.col("term_id").alias("src"), F.col("replaced_by").alias("dst"), F.lit(5).alias("tier")
+    )
+    targets = _current_in_target(terms).select(F.col("term_id").alias("dst"))
+    return xref.unionByName(replacement).join(F.broadcast(targets), "dst", "left_semi")
+
+
+def link_canonical(candidates: DataFrame, terms: DataFrame, xrefs: DataFrame) -> DataFrame:
+    """J3 + J10 — xref canonicalization (OxO analog) and obsolete-term
+    replacement, as ONE broadcast join of the candidate table with the
+    edge table of _canonical_edges.
+    A candidate seeds
+    * an xref edge when it is HIGH confidence and its mention has no
+      current candidate (get_uris_for_oxo + the OxO gate, main.py:18-31,
+      59-63), read off a per-mention window;
+    * a replacement edge when it is the label-equal (lev == 0) obsolete
+      term (create_table_for_manual_curation.py:24-37).
+    Returns link rows plus their `tier`; link_cascade's min-tier window
+    gives tier 4 precedence over tier 5 per mention."""
+    per_mention = Window.partitionBy("mention_norm")
+    any_current = F.max(F.col("is_current").cast("int")).over(per_mention) == 1
+    seeds = candidates.select(
+        "mention_norm",
+        F.col("term_id").alias("src"),
+        ((F.col("confidence") == "HIGH") & ~any_current).alias("xref_seed"),
+        ((F.col("lev") == 0) & F.col("is_obsolete")).alias("replacement_seed"),
+    )
+    is_xref = F.col("tier") == 4
     return (
-        candidates.groupBy("mention_norm")
-        .agg(F.max(F.col("is_current").cast("int")).alias("any_current"))
-        .filter(F.col("any_current") == 0)
-        .select("mention_norm")
-    )
-
-
-def link_xref(
-    unresolved: DataFrame,
-    candidates: DataFrame,
-    xrefs: DataFrame,
-    terms: DataFrame,
-    accept_distance: int = ACCEPT_XREF_DISTANCE,
-) -> DataFrame:
-    """J3 — xref canonicalization (OxO analog).
-
-    Seeds are the HIGH-confidence candidate terms of gated mentions
-    (get_uris_for_oxo, main.py:18-31); an edge is accepted iff
-    distance == 1 and its destination is current in the target ontology
-    (trait.py:69-81). The xref table is a dimension -> broadcast joins;
-    bounded multi-hop traversal lives in operators/xref_bfs.py.
-    """
-    gated = unresolved.join(F.broadcast(xref_gate(candidates)), "mention_norm", "inner")
-    seeds = (
-        gated.join(F.broadcast(candidates.filter(F.col("confidence") == "HIGH")), "mention_norm", "inner")
-        .select("mention_norm", F.col("term_id").alias("seed_id"))
-        .distinct()
-    )
-    edges = xrefs.filter(F.col("distance") == accept_distance).select(
-        F.col("src_curie").alias("seed_id"), F.col("dst_curie").alias("dst_id")
-    )
-    targets = _current_in_target(terms).select(F.col("term_id").alias("dst_id"))
-    return (
-        seeds.join(F.broadcast(edges), "seed_id", "inner")
-        .join(F.broadcast(targets), "dst_id", "inner")
+        seeds.join(F.broadcast(_canonical_edges(terms, xrefs)), "src")
+        .filter(F.when(is_xref, F.col("xref_seed")).otherwise(F.col("replacement_seed")))
         .select(
             "mention_norm",
-            F.col("dst_id").alias("term_id"),
-            F.lit("xref").alias("match_type"),
+            F.col("dst").alias("term_id"),
+            F.when(is_xref, "xref").otherwise("replacement").alias("match_type"),
             F.lit("HIGH").alias("confidence"),
             F.lit(PRED_CANONICAL).alias("pred"),
+            "tier",
         )
         .distinct()
     )
-
-
-def link_replacement(unresolved: DataFrame, candidates: DataFrame, terms: DataFrame) -> DataFrame:
-    """J10 — obsolete-term replacement resolution (ols.py:111-134 +
-    create_table_for_manual_curation.py:24-37, depth 1): a mention whose
-    label-equal (lev==0) candidate is obsolete-with-replacement links to the
-    replacement term, provided the replacement is current in target."""
-    obsolete_exact = candidates.filter(
-        (F.col("lev") == 0) & F.col("is_obsolete") & F.col("replaced_by").isNotNull()
-    ).select("mention_norm", "replaced_by")
-    replacement = _current_in_target(terms).select(F.col("term_id").alias("replaced_by"), F.col("term_id"))
-    return (
-        unresolved.join(F.broadcast(obsolete_exact), "mention_norm", "inner")
-        .join(F.broadcast(replacement), "replaced_by", "inner")
-        .select(
-            "mention_norm",
-            "term_id",
-            F.lit("replacement").alias("match_type"),
-            F.lit("HIGH").alias("confidence"),
-            F.lit(PRED_CANONICAL).alias("pred"),
-        )
-        .distinct()
-    )
-
-
-# Above this many dictionary terms, the JVM broadcast length-band join is
-# replaced by the Arrow length-band-indexed pandas UDF (fuzzy_udf.py), whose
-# per-mention work is O(band), not O(|dictionary|). The two paths are
-# row-for-row identical (tests/test_fuzzy_udf.py asserts it). Threshold set
-# from measurement (BENCH.md round-3 JVM-vs-Arrow table, numpy-vectorized
-# scorer): crossover lies between 1k and 10k terms; Arrow wins 1.8x at 10k
-# and 3.1x at 100k, JVM wins 1.6x at 1k.
-ARROW_FUZZY_TERM_THRESHOLD = 10_000
 
 
 def link_cascade(
@@ -306,14 +328,11 @@ def link_cascade(
     tiers 3-5 are resolved by precedence over one candidate table.
 
     Scale shape: every table after the distinct-mention input is
-    dictionary-sized, so each join is broadcast-hinted. The tier-1+2
-    aggregate, the candidate table and the links are persisted through
-    session.persist; the caller's Persisted owner releases them.
-
-    Fuzzy candidates come from the Arrow length-band UDF when the
-    dictionary exceeds ARROW_FUZZY_TERM_THRESHOLD terms (the broadcast
-    nested-loop join stops being sane around there), else from the JVM
-    broadcast levenshtein join.
+    dictionary-sized, so each join is broadcast-hinted. The fuzzy
+    candidates are one signature equi-join (fuzzy_candidates); tiers 4+5
+    read them through one canonical-edge join (link_canonical). The
+    tier-1+2 aggregate, the candidate table and the links are persisted
+    through session.persist; the caller's Persisted owner releases them.
     """
     # The distinct-mention table is dictionary-scale BY DESIGN (the A1
     # pre-aggregation already collapsed the corpus); coalesce it so every
@@ -322,42 +341,22 @@ def link_cascade(
     # hundreds of millions.
     mentions = distinct_mentions.select("mention_norm").coalesce(1)
     exact, normalized, unresolved1 = exact_normalized_links(mentions, terms)
-
-    # dictionary row count for the Arrow-vs-JVM gate, cached on the
-    # (memoized) terms frame so repeated cascade builds in one session
-    # pay the count job once
-    n_terms = getattr(terms, "_cascade_term_count", None)
-    if n_terms is None:
-        n_terms = terms.count()
-        terms._cascade_term_count = n_terms
-    if n_terms > ARROW_FUZZY_TERM_THRESHOLD:
-        from .fuzzy_udf import fuzzy_candidates_arrow
-
-        cands = persist(fuzzy_candidates_arrow(unresolved1, terms))
-    else:
-        cands = persist(fuzzy_candidates(unresolved1, terms))
+    cands = persist(fuzzy_candidates(unresolved1, terms))
 
     # --- Tiers 3-5 from the ONE persisted candidate table, with tier
-    # PRECEDENCE as a window instead of an anti-join ladder (round 6):
+    # PRECEDENCE as a window instead of an anti-join ladder:
     # * fuzzy and xref mention sets are disjoint by construction — the
     #   xref gate (has candidates, NONE current) and fuzzy acceptance
-    #   (REQUIRES a current candidate) are mutually exclusive, so
-    #   link_xref over unresolved1 equals the old post-fuzzy run exactly;
+    #   (REQUIRES a current candidate) are mutually exclusive;
     # * replacement is the only tier needing a guard (an obsolete lev==0
     #   candidate can coexist with other current/xref-resolving ones):
     #   min-tier-per-mention over the union keeps a replacement row only
-    #   when its mention has no tier-3/4 row — the old unresolved3
-    #   membership, without the two chained broadcast anti-joins.
+    #   when its mention has no tier-3/4 row.
     fuzzy = link_fuzzy(cands).withColumn("tier", F.lit(3))
-    xref = link_xref(unresolved1, cands, xrefs, terms).withColumn("tier", F.lit(4))
-    repl = link_replacement(unresolved1, cands, terms).withColumn("tier", F.lit(5))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("mention_norm")
+    canonical = link_canonical(cands, terms, xrefs)
     links345 = (
-        fuzzy.unionByName(xref)
-        .unionByName(repl)
-        .withColumn("__min_tier", F.min("tier").over(w))
+        fuzzy.unionByName(canonical)
+        .withColumn("__min_tier", F.min("tier").over(Window.partitionBy("mention_norm")))
         .filter(F.col("tier") == F.col("__min_tier"))
         .select(*LINK_COLUMNS)
     )

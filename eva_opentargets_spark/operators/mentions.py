@@ -75,10 +75,10 @@ def _check_vocabulary(vocabulary: list[str]) -> tuple[list[str], list[str]]:
 # Above this many vocabulary terms the in-row JVM gazetteer (whose InSet
 # literals live in the plan) hands off to the Arrow UDF, whose closure ships
 # once per executor — the dictionary-literal size gate, same discipline as
-# MAPPING_LITERAL_THRESHOLD and ARROW_FUZZY_TERM_THRESHOLD. Well below the
-# gate the expression path wins outright: the match is two O(1) hash-set
-# probes per token inside whole-stage codegen, with no JVM->Python Arrow
-# transpose (guide §4.1: built-ins beat any UDF when they exist).
+# MAPPING_LITERAL_THRESHOLD. Well below the gate the expression path wins
+# outright: the match is two O(1) hash-set probes per token inside
+# whole-stage codegen, with no JVM->Python Arrow transpose (guide §4.1:
+# built-ins beat any UDF when they exist).
 GAZETTEER_EXPR_MAX_TERMS = 10_000
 
 

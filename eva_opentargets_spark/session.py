@@ -68,18 +68,22 @@ def estimated_input_splits(df) -> int:
     parquet scan sizeInBytes is the exact file-size sum, so the estimate
     matches Spark's own split math to within openCost rounding; both
     over- and under-estimates only move a heuristic whose two outcomes
-    are 'repartition to cores' vs 'inherit input layout'."""
-    jqe = df._jdf.queryExecution()
-    size = int(str(jqe.optimizedPlan().stats().sizeInBytes()))
-    conf = df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    unit = {"k": 1024, "m": 1024**2, "g": 1024**3, "b": 1}
-    low = conf.strip().lower()
-    mult, digits = 1, low
-    for suffix in ("kb", "mb", "gb", "k", "m", "g", "b"):
-        if low.endswith(suffix):
-            mult, digits = unit[suffix[0]], low[: -len(suffix)]
-            break
-    max_bytes = max(1, int(digits) * mult)
+    are 'repartition to cores' vs 'inherit input layout'.
+
+    A leaf without statistics (an RDD- or parallelize-backed relation)
+    reports spark.sql.defaultSizeInBytes; the root size is then meaningless
+    (a projection above it scales it by row width to a small number), so
+    any such leaf, or a root at that size, means "unknown" and the estimate
+    is 1: callers take the conservative repartition."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    unknown = conf.defaultSizeInBytes()
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    size = int(str(plan.stats().sizeInBytes()))
+    leaf_sizes = (int(str(leaves.apply(i).stats().sizeInBytes())) for i in range(leaves.size()))
+    if size >= unknown or any(s >= unknown for s in leaf_sizes):
+        return 1
+    max_bytes = max(1, conf.filesMaxPartitionBytes())
     return max(1, (size + max_bytes - 1) // max_bytes)
 
 

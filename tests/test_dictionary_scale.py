@@ -6,15 +6,15 @@ reference's real scale (mappings/latest_mappings.tsv has 13,211 rows;
 EFO is ~30k terms) — and pins the PLAN SHAPE the size gates must choose
 there:
 
-  (a) the linking cascade auto-selects the Arrow length-band fuzzy scorer
-      (terms > ARROW_FUZZY_TERM_THRESHOLD),
+  (a) the fuzzy candidates stay one JVM signature equi-join: no Arrow
+      Python scorer and no broadcast nested-loop join at 30k terms,
   (b) disease-group derivation runs as the Arrow pandas UDF, and NO
       create_map literal with the mapping inlined appears in the plan
       (mappings > MAPPING_LITERAL_THRESHOLD — the round-2 scale-killer),
   (c) links and evidence strings still come out non-empty.
 
-bench_fuzzy.py measures the scorer in isolation; this pins the WHOLE
-path's plan selection at the same scale.
+bench_fuzzy.py measures the candidate join in isolation; this pins the
+WHOLE path's plan selection at the same scale.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ from eva_opentargets_spark.operators.consequences import (
     demo_consequences,
 )
 from eva_opentargets_spark.operators.evidence import evidence_product, with_disease_groups
-from eva_opentargets_spark.operators.linking import ARROW_FUZZY_TERM_THRESHOLD
 from eva_opentargets_spark.operators.records import with_record_attrs
 from eva_opentargets_spark.pipeline import run_pipeline
 from eva_opentargets_spark.sources.dictionary import demo_terms, demo_xrefs
@@ -89,15 +88,17 @@ def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_dictionary_scale_cascade_selects_arrow_and_links(spark, big_terms):
-    assert big_terms.count() > ARROW_FUZZY_TERM_THRESHOLD
+def test_dictionary_scale_cascade_signature_join_and_links(spark, big_terms):
+    assert big_terms.count() > N_TERMS
     transcripts = derive_transcripts(spark, SF_DIR)
     res = run_pipeline(spark, transcripts, terms=big_terms, xrefs=demo_xrefs(spark))
     try:
-        # (a) the candidates frame must be the Arrow fuzzy scorer's output
-        assert "ArrowEvalPython" in _physical_plan(res.candidates), (
-            "auto gate did not select the Arrow fuzzy path at 30k terms"
-        )
+        # (a) the candidates frame is the signature equi-join: no Python
+        # scorer, no length-band cross join
+        plan = _physical_plan(res.candidates)
+        assert "BroadcastHashJoin" in plan
+        assert "ArrowEvalPython" not in plan, "fuzzy candidates went through a Python UDF"
+        assert "BroadcastNestedLoopJoin" not in plan, "fuzzy candidates fell back to a cross join"
         # (c) the cascade still resolves the corpus mentions. 17, not the
         # fixture dictionary's 18: a synthetic filler label lands within
         # fuzzy range of 'vector', giving it a CURRENT candidate, which

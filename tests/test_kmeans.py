@@ -112,3 +112,34 @@ def test_assign_cells_sql_literal_path_matches_lambda_path(spark):
                                 "vec_id long, embedding array<double>")
     out = assign_cells(df2, [[float("inf"), 0.0], [0.0, 0.0]]).collect()[0]
     assert out["cell"] == 1
+
+
+def test_cents_sql_rejects_empty_and_ragged_centroids(spark):
+    """Empty or ragged centroid lists fail with a clear ValueError instead
+    of emitting an `array()` literal that fails analysis with a type error."""
+    import pytest
+
+    from eva_opentargets_spark.operators.kmeans import _cents_sql
+
+    for bad in ([], [[]], [[1.0, 2.0], [3.0]]):
+        with pytest.raises(ValueError, match="equal-length"):
+            _cents_sql(bad)
+    df = spark.createDataFrame([(0, [1.0, 2.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="equal-length"):
+        assign_cells(df, [])
+
+
+def test_sq_dist_sql_fragment_matches_lambda(spark):
+    """The one squared-distance SQL fragment that assign_cells and
+    ivf_kmeans_topk both parse gives bit-identical distances to the
+    per-centroid lambda build."""
+    from pyspark.sql import functions as F
+
+    from eva_opentargets_spark.operators.kmeans import _SQ_DIST_SQL, _cents_sql, _sq_dist
+
+    emb = _emb(spark).select(F.col("vec_id"), F.col("embedding").cast("array<double>").alias("e"))
+    cents = [list(r["e"]) for r in emb.orderBy("vec_id").limit(3).collect()]
+    sql = emb.select("vec_id", F.expr(f"transform({_cents_sql(cents)}, c -> {_SQ_DIST_SQL})").alias("d"))
+    lam = emb.select("vec_id", F.array(*[_sq_dist(F.col("e"), c) for c in cents]).alias("d"))
+    assert sql.count() > 0
+    assert sql.exceptAll(lam).count() == 0 and lam.exceptAll(sql).count() == 0

@@ -8,11 +8,9 @@ from pyspark.sql import functions as F
 from eva_opentargets_spark.operators.linking import (
     exact_normalized_links,
     fuzzy_candidates,
+    link_canonical,
     link_cascade,
     link_fuzzy,
-    link_replacement,
-    link_xref,
-    xref_gate,
 )
 from eva_opentargets_spark.pipeline import MATCH_TYPES, link_counters
 
@@ -60,28 +58,32 @@ def test_fuzzy_acceptance_rule(spark, terms):
 
 
 def test_xref_gate(spark, terms):
-    # main.py:59-63 — xref only when candidates exist and NONE is current
+    # main.py:59-63 — xref only when candidates exist and NONE is current.
+    # Every candidate term gets a distance-1 edge to a current target, so
+    # the mentions that reach the xref tier are exactly the gated ones.
     cands = fuzzy_candidates(_mentions(spark, ["merge", "vector", "slow"]), terms)
-    gated = {r.mention_norm for r in xref_gate(cands).collect()}
+    to_target = [(r.term_id, "EFO:0001", 1, "test") for r in cands.select("term_id").distinct().collect()]
+    xrefs = spark.createDataFrame(to_target, "src_curie string, dst_curie string, distance int, source string")
+    links = link_canonical(cands, terms, xrefs)
+    gated = {r.mention_norm for r in links.filter(F.col("match_type") == "xref").collect()}
     assert gated == {"vector", "slow"}  # 'merge' has current candidates
 
 
 def test_xref_distance_rule(spark, terms, xrefs):
     # trait.py:76 — accept only distance == 1
-    unresolved = _mentions(spark, ["vector", "dup"])
-    cands = fuzzy_candidates(unresolved, terms)
-    links = {r.mention_norm: r for r in link_xref(unresolved, cands, xrefs, terms).collect()}
+    cands = fuzzy_candidates(_mentions(spark, ["vector", "dup"]), terms)
+    links = {r.mention_norm: r for r in link_canonical(cands, terms, xrefs).collect()}
     assert links["vector"].term_id == "EFO:0011"
     assert links["vector"].pred == "is_a"
     assert "dup" not in links  # only a distance-2 edge exists
 
 
-def test_replacement_depth1(spark, terms):
+def test_replacement_depth1(spark, terms, xrefs):
     # ols.py:111-134 — obsolete term chases replaced_by once
-    unresolved = _mentions(spark, ["slow"])
-    cands = fuzzy_candidates(unresolved, terms)
-    links = link_replacement(unresolved, cands, terms).collect()
+    cands = fuzzy_candidates(_mentions(spark, ["slow"]), terms)
+    links = link_canonical(cands, terms, xrefs).collect()
     assert len(links) == 1 and links[0].term_id == "EFO:0009" and links[0].pred == "is_a"
+    assert links[0].match_type == "replacement"
 
 
 def test_cascade_early_exit_and_partition(spark, terms, xrefs):

@@ -1,37 +1,46 @@
-"""JVM-vs-Arrow fuzzy-candidate benchmark at dictionary scale.
+"""Fuzzy-candidate join benchmark at dictionary scale: the engine's
+pigeonhole signature equi-join (linking.fuzzy_candidates) against the
+broadcast nested-loop length-band join it replaced.
 
-Round-2 verdict #9: exercise the Arrow fuzzy path at its design scale and
-prove the ARROW_FUZZY_TERM_THRESHOLD auto-flip (linking.py) wins there.
-Generates synthetic ontology dictionaries of 1k/10k/50k/100k terms with a
-REALISTIC label-length spread (4-30 chars — length-band pruning is the whole
-point of both fast paths; uniform lengths would degenerate both to full
-scans), scores a fixed 1,000-mention distinct-mention table (8 partitions,
-so both paths parallelize the way the production cascade does) through BOTH
-paths, and prints a wall-time table (min of N runs).
+Generates synthetic ontology dictionaries of 1k/10k/100k terms with a
+realistic label-length spread (4-33 chars: both joins prune by length, so
+uniform lengths would flatter neither), scores a fixed table of 1,000
+distinct mentions (8 partitions) through both joins, and prints a
+wall-time table (min of N runs). At the smallest size both joins must equal
+a brute-force cross join + `levenshtein` filter as multisets. The
+nested-loop join is skipped above NESTED_MAX_TERMS terms. Runs at
+local[<cpu count>].
 
-Run ALONE on the host (shared-box discipline, see BENCH.md):
-    python tools/bench_fuzzy.py [--sizes 1000,10000,50000,100000] [--runs 2]
+Run alone on the host:
+    python tools/bench_fuzzy.py [--sizes 1000,10000,100000] [--runs 2]
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
+import os
 import sys
 import time
+from collections import Counter
 
 sys.path.insert(0, ".")
 
+from pyspark.sql import functions as F  # noqa: E402
+
+from eva_opentargets_spark.config import FUZZY_MAX_LEV, FUZZY_MIN_LEN_SLACK  # noqa: E402
+from eva_opentargets_spark.operators.linking import fuzzy_candidates, label_surface  # noqa: E402
+
+COLS = ["mention_norm", "term_id", "label_norm", "lev"]
+NESTED_MAX_TERMS = 10_000  # the nested-loop join already takes ~5 s a run here
+
 
 def pseudo_word(i: int, salt: str = "") -> str:
-    """Deterministic pronounceable pseudo-word (no RNG, stable across runs),
-    2-8 syllables -> 4-16 chars per word."""
+    """Deterministic pronounceable pseudo-word, 2-8 syllables -> 4-16
+    chars. Seeded by md5, not hash(): str hashes are randomized per process
+    (PYTHONHASHSEED), which would make the dictionaries drift across runs."""
     cons = "bcdfghklmnprstvz"
     vow = "aeiou"
-    # stable digest, NOT hash(): str.__hash__ is randomized per process
-    # (PYTHONHASHSEED), which would make "deterministic" dictionaries drift
-    # across runs and the JVM-vs-Arrow crossover unreproducible
-    import hashlib
-
     salt_n = int.from_bytes(hashlib.md5(salt.encode()).digest()[:4], "little")
     x = (i * 2654435761 + salt_n % 1000003) & 0xFFFFFFFF
     out = []
@@ -44,8 +53,7 @@ def pseudo_word(i: int, salt: str = "") -> str:
 
 
 def build_terms(spark, n: int):
-    # every 5th term a bigram label -> lengths 4-16 (unigrams) / 9-33
-    # (bigrams): the band index prunes most of the dictionary per mention
+    # every 5th term a bigram label -> lengths 4-16 (unigrams) / 9-33 (bigrams)
     rows = [
         (f"T:{i}", pseudo_word(i) + (" " + pseudo_word(i, "b") if i % 5 == 0 else ""),
          True, i % 97 == 0, None)
@@ -59,71 +67,105 @@ def build_terms(spark, n: int):
 
 
 def build_mentions(spark, n: int = 1000, vocab: int = 100_000):
-    # mentions are dictionary words with 0-2 character edits -> realistic
-    # fuzzy hit rates at every dictionary size; 8 partitions so both
-    # candidate paths run parallel tasks
-    rows = []
+    # dictionary words with 0-1 character edits -> realistic fuzzy hit
+    # rates at every dictionary size; one row per distinct string, as in
+    # the cascade's distinct-mention table
+    words = set()
     for i in range(n):
         w = pseudo_word((i * 7919) % vocab)
         if i % 3 == 1 and len(w) > 4:
             w = w[:-1]  # deletion
         elif i % 3 == 2:
             w = w + "x"  # insertion
-        rows.append((w,))
-    return spark.createDataFrame(rows, "mention_norm string").repartition(8)
+        words.add(w)
+    return spark.createDataFrame([(w,) for w in sorted(words)], "mention_norm string").repartition(8)
+
+
+def _bound(mention_col: str = "mention_norm"):
+    n = F.length(mention_col)
+    return F.least(F.lit(FUZZY_MAX_LEV), F.greatest(F.lit(0), n - F.lit(FUZZY_MIN_LEN_SLACK)))
+
+
+def _surface(terms):
+    return label_surface(terms).select("term_id", F.lower("label").alias("label_norm"))
+
+
+def nested_loop_candidates(mentions, terms):
+    """The replaced join: broadcast nested loop on the length band
+    |len(m) - len(label)| <= bound, then the levenshtein filter."""
+    m = mentions.select("mention_norm", _bound().alias("max_lev"))
+    joined = m.join(
+        F.broadcast(_surface(terms)),
+        F.abs(F.length("mention_norm") - F.length("label_norm")) <= F.col("max_lev"),
+    ).withColumn("lev", F.levenshtein("mention_norm", "label_norm"))
+    return joined.filter(F.col("lev") <= F.col("max_lev")).select(*COLS)
+
+
+def brute_force_candidates(mentions, terms):
+    lev = F.levenshtein("mention_norm", "label_norm")
+    return (
+        mentions.crossJoin(F.broadcast(_surface(terms)))
+        .filter(lev <= _bound())
+        .select("mention_norm", "term_id", "label_norm", lev.alias("lev"))
+    )
+
+
+def multiset(df) -> Counter:
+    return Counter(tuple(r) for r in df.select(*COLS).collect())
 
 
 def materialize(df) -> float:
-    t0 = time.time()
+    t0 = time.perf_counter()
     df.write.format("noop").mode("overwrite").save()
-    return time.time() - t0
+    return time.perf_counter() - t0
 
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sizes", default="1000,10000,50000,100000")
+    ap.add_argument("--sizes", default="1000,10000,100000")
     ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args()
 
-    from eva_opentargets_spark.operators.fuzzy_udf import fuzzy_candidates_arrow
-    from eva_opentargets_spark.operators.linking import fuzzy_candidates
     from eva_opentargets_spark.session import get_spark
 
-    spark = get_spark(app_name="bench_fuzzy", master="local[8]", shuffle_partitions=8)
+    master = f"local[{os.cpu_count()}]"
+    spark = get_spark(app_name="bench_fuzzy", master=master, shuffle_partitions=8)
     mentions = build_mentions(spark).persist()
-    mentions.count()
+    n_mentions = mentions.count()
 
-    # correctness cross-check once, at the smallest size (the pytest twin
-    # covers semantics; this guards the benchmark's own generators)
+    # identity check at the smallest size (tests/test_fuzzy_candidates.py
+    # covers the edge cases; this guards the benchmark's own generators)
     t0 = build_terms(spark, 1000).persist()
-    nj = fuzzy_candidates(mentions, t0).count()
-    na = fuzzy_candidates_arrow(mentions, t0).count()
-    assert nj == na, (nj, na)
+    want = multiset(brute_force_candidates(mentions, t0))
+    for name, join in (("signature", fuzzy_candidates), ("nested loop", nested_loop_candidates)):
+        if multiset(join(mentions, t0)) != want:
+            raise SystemExit(f"{name} join differs from brute force at 1k terms")
     t0.unpersist()
-    print(f"paths agree at 1k terms: {nj} candidates", flush=True)
+    print(f"both joins equal brute force at 1k terms: {sum(want.values())} candidates", flush=True)
 
-    print(f"{'terms':>8} | {'jvm sec':>8} | {'arrow sec':>9} | winner", flush=True)
+    print(f"{'terms':>8} | {'signature s':>11} | {'nested loop s':>13}", flush=True)
     results = []
     for n in (int(s) for s in args.sizes.split(",")):
         terms = build_terms(spark, n).persist()
         terms.count()
-        jvm = min(materialize(fuzzy_candidates(mentions, terms)) for _ in range(args.runs))
-        arrow = min(
-            materialize(fuzzy_candidates_arrow(mentions, terms)) for _ in range(args.runs)
-        )
-        winner = "arrow" if arrow < jvm else "jvm"
-        print(f"{n:>8} | {jvm:>8.2f} | {arrow:>9.2f} | {winner}", flush=True)
-        results.append((n, round(jvm, 2), round(arrow, 2), winner))
+        sig = min(materialize(fuzzy_candidates(mentions, terms)) for _ in range(args.runs))
+        nested = None
+        if n <= NESTED_MAX_TERMS:
+            nested = min(materialize(nested_loop_candidates(mentions, terms)) for _ in range(args.runs))
+        shown = "-" if nested is None else f"{nested:.2f}"
+        print(f"{n:>8} | {sig:>11.2f} | {shown:>13}", flush=True)
+        results.append((n, f"{sig:.2f}", shown))
         terms.unpersist()
     spark.stop()
 
     lines = [
         "",
-        f"## JVM-vs-Arrow fuzzy scoring (1,000 distinct mentions, min of {args.runs}, local[8])",
+        f"## Fuzzy candidates: signature join vs nested-loop join "
+        f"({n_mentions} distinct mentions, min of {args.runs}, {master})",
         "",
-        "| dictionary terms | JVM broadcast-band join (s) | Arrow banded UDF (s) | winner |",
-        "|---|---|---|---|",
-    ] + [f"| {n} | {j} | {a} | {w} |" for n, j, a, w in results] + [""]
+        "| dictionary terms | signature equi-join (s) | broadcast nested-loop join (s) |",
+        "|---|---|---|",
+    ] + [f"| {n} | {s} | {b} |" for n, s, b in results] + [""]
     with open("BENCH.md", "a") as fh:
         fh.write("\n".join(lines))
     print("appended to BENCH.md", flush=True)
