@@ -82,7 +82,7 @@ def replicated_transcripts(spark, sf_dir: str, factor: int = REPLICATE):
 
     t = derive_transcripts(spark, sf_dir)
     # repartition on conv_id: the testdata is a single parquet file (1-2 input
-    # splits), which would serialize the extraction UDF onto 2 cores. In
+    # splits), which would serialize the extraction onto 2 cores. In
     # production the transcript table is conv_id-bucketed at write time
     # (sources.transcripts.write_transcripts) so this shuffle doesn't exist.
     # Partition count is CORPUS-sized (~500k turns each), not core-sized: a

@@ -8,7 +8,7 @@ linking cascade). This package re-expresses that pipeline Spark-first
 over tables of multi-turn transcripts:
 
     transcripts(conv_id, turn_idx, role, text, tool, ts)
-      -> mention extraction (vectorized pandas UDF gazetteer)
+      -> mention extraction (in-row JVM gazetteer expression)
       -> distinct-mention pre-aggregation  (kills skew; replaces lru_cache)
       -> linking cascade: exact -> fuzzy -> xref -> replacement
          (broadcast ontology dictionary; reference semantics from
@@ -16,7 +16,7 @@ over tables of multi-turn transcripts:
       -> (subj, pred, obj) triple emission + metrics + curation routing
 
 plus the large-scale training-data operators (dedup, ANN similarity,
-text analysis, multimodal plumbing) a 100 TB corpus pipeline needs.
+text analysis) a 100 TB corpus pipeline needs.
 """
 
 __version__ = "0.1.0"

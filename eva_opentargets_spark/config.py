@@ -62,8 +62,7 @@ DEFAULT_CONV_BUCKETS = 32
 # Above this many curated-mapping rows, the in-row disease-group derivation
 # stops inlining the mention->terms dictionary as a literal create_map
 # (plan/codegen size is O(|mapping|) per operator) and switches to an
-# Arrow-batched pandas UDF whose closure dict ships once per executor —
-# the same gate discipline as mentions.GAZETTEER_EXPR_MAX_TERMS. The
+# Arrow-batched pandas UDF whose closure dict ships once per executor. The
 # reference's real mapping table is ~13k rows (mappings/latest_mappings.tsv),
 # far beyond sane literal-plan territory.
 MAPPING_LITERAL_THRESHOLD = 1_000

@@ -264,7 +264,7 @@ def evidence_product(with_consequences: DataFrame) -> DataFrame:
     the is_somatic flag of the origin group (:207-215)."""
     # explode_outer + null-filter: a plain explode gets an optimizer-
     # inferred size()>0 filter on the input EXPRESSION, which re-runs the
-    # extraction UDF feeding disease_groups a second time per row.
+    # extraction feeding disease_groups a second time per row.
     exploded = (
         with_consequences.withColumn("og", F.explode_outer("origin_groups"))
         .withColumn("dg", F.explode_outer("disease_groups"))

@@ -22,46 +22,59 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..session import persist
 
 
 # Squared L2 distance from the row's vector `e` to a centroid `c`, as SQL:
-# the one fragment assign_cells and ivf_kmeans_topk both parse, so the two
-# stay bit-identical to each other and to the _sq_dist lambda build.
+# the one fragment assign_cells, inertia and ivf_kmeans_topk all parse, so
+# they stay bit-identical to each other and to the _sq_dist lambda build.
 _SQ_DIST_SQL = "aggregate(zip_with(e, c, (x, y) -> (x-y)*(x-y)), 0.0D, (acc, v) -> acc + v)"
 
 
-def _cents_sql(centroids) -> str | None:
-    """The centroid list as ONE SQL array<array<double>> literal. Python
-    repr round-trips doubles exactly and the D suffix keeps the parser in
-    DoubleType, so the literal carries the same values the lambda-built
-    form would. Returns None when any value is non-finite (SQL literals
-    can't spell NaN/Infinity) — callers fall back to the per-centroid
-    expression build. Raises ValueError on an empty centroid list or on
-    centroids of different (or zero) dimension: neither form has a
-    meaningful argmin there."""
+def _sql_double(x: float) -> str:
+    # repr round-trips finite doubles exactly and the D suffix keeps the
+    # parser in DoubleType; non-finite values have no literal form, but
+    # Spark parses their string casts
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def _cents_sql(centroids) -> str:
+    """The centroid list as ONE SQL array<array<double>> literal carrying
+    exactly the values the lambda-built form would, NaN and ±Infinity
+    included. Raises ValueError on an empty centroid list or on centroids
+    of different (or zero) dimension: there is no meaningful argmin
+    there."""
     dims = {len(c) for c in centroids}
     if not centroids or 0 in dims or len(dims) > 1:
         raise ValueError(
             f"centroids must be a non-empty list of equal-length, non-empty vectors; "
             f"got {len(centroids)} centroids of dimensions {sorted(dims)}"
         )
-    if not all(math.isfinite(x) for c in centroids for x in c):
-        return None
     return (
         "array("
         + ",".join(
-            "array(" + ",".join(f"{float(x)!r}D" for x in c) + ")" for c in centroids
+            "array(" + ",".join(_sql_double(float(x)) for x in c) + ")" for c in centroids
         )
         + ")"
     )
 
 
+def _dists(centroids) -> Column:
+    """array<double> of the row's squared distances to every centroid —
+    ONE parsed expression: a per-centroid build would cost py4j lambda
+    conversions per centroid per call inside the Lloyd loop."""
+    return F.expr(f"transform({_cents_sql(centroids)}, c -> {_SQ_DIST_SQL})")
+
+
 def _sq_dist(a, centroid: list[float]):
-    # one expression parse per centroid, not dim F.lit py4j calls
-    # (similarity.lit_double_array: plan construction is driver latency)
+    """The per-centroid lambda build of one squared distance — the
+    reference the SQL literal path is tested against."""
     from .similarity import lit_double_array
 
     c = lit_double_array(float(x) for x in centroid)
@@ -83,18 +96,7 @@ def assign_cells(
     v = embeddings.select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("e")
     )
-    cs = _cents_sql(centroids)
-    if cs is not None:
-        # ONE parsed expression for the whole distance array (round 6): the
-        # per-centroid _sq_dist build costs 2 Python-lambda conversions per
-        # centroid PER CALL — pure py4j driver latency inside the Lloyd
-        # loop, where this runs every iteration with fresh centroid
-        # literals. Same ZipWith/Aggregate ops in the same order, so the
-        # floating-point result is bit-identical (pinned by
-        # tests/test_kmeans equality case).
-        dists = F.expr(f"transform({cs}, c -> {_SQ_DIST_SQL})")
-    else:
-        dists = F.array(*[_sq_dist(F.col("e"), c) for c in centroids])
+    dists = _dists(centroids)
     # argmin with lowest-index tie-break: array_position finds the FIRST
     # occurrence of the minimum
     cell = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
@@ -167,9 +169,8 @@ def inertia(
     """Sum of squared distances to the assigned centroid (the quantity
     Lloyd iterations are guaranteed to not increase)."""
     assigned = assign_cells(embeddings, centroids, id_col, vec_col)
-    dists = F.array(*[_sq_dist(F.col("e"), c) for c in centroids])
     return (
-        assigned.select(F.element_at(dists, F.col("cell") + 1).alias("d"))
+        assigned.select(F.element_at(_dists(centroids), F.col("cell") + 1).alias("d"))
         .agg(F.sum("d"))
         .first()[0]
     )
@@ -205,22 +206,13 @@ def ivf_kmeans_topk(
     v = embeddings.select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("e")
     )
-    cs = _cents_sql(centroids)
-    if cs is not None:
-        # same single-parse discipline as assign_cells: transform's index
-        # lambda gives the 0-based cell id the enumerate() literal carried
-        ranked_cells = F.expr(
-            f"array_sort(transform({cs}, (c, i) -> struct({_SQ_DIST_SQL} AS d, i AS cell)))"
-        )
-    else:
-        ranked_cells = F.array_sort(
-            F.array(
-                *[
-                    F.struct(_sq_dist(F.col("e"), c).alias("d"), F.lit(i).alias("cell"))
-                    for i, c in enumerate(centroids)
-                ]
-            )
-        )
+    # same single-parse discipline as assign_cells: transform's index
+    # lambda gives the 0-based cell id
+    ranked_cells = F.expr(
+        f"array_sort(transform({_cents_sql(centroids)}, "
+        f"(c, i) -> struct({_SQ_DIST_SQL} AS d, i AS cell)))"
+    )
+
     def norm(col):
         return F.sqrt(
             F.aggregate(F.transform(col, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)

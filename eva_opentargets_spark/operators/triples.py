@@ -35,7 +35,7 @@ def emit_triples(mentions: DataFrame, links: DataFrame, unique_per_turn: bool = 
     (conv_id, turn_idx, mention_norm) key: repeated occurrences within a turn
     are the only duplicate source (links are unique per mention x term).
     Callers that can produce per-turn-unique mentions without a shuffle
-    (operators.mentions.unique_mentions_per_turn — array_distinct inside the
+    (operators.mentions.unique_per_turn — array_distinct inside the
     extraction row) should pass unique_per_turn=True, making the whole
     triple path shuffle-free.
     """

@@ -7,13 +7,13 @@ Reference analog: the annotation pipeline DAG
 Spark plan: Nextflow chunking/concat/counter-summing become native
 partitioning and partial aggregation.
 
-Scan discipline (round-2 fix): the extraction pandas UDF is applied in ONE
-place (`extract_turn_mentions`); the occurrence view, the per-turn-distinct
-view, the metrics counters and the triple path all derive from that single
-`ms` array column. See run_pipeline for the measured cache-vs-recompute
-tradeoff; at full 100 TB scale the extraction table is materialized to
-storage between stages (the per-wave checkpoint runner does this), never
-executor-memory cached.
+Scan discipline: the in-row gazetteer expression is applied in ONE place
+(`extract_turn_mentions`); the occurrence view, the per-turn-distinct view,
+the metrics counters and the triple path all derive from that single `ms`
+array column. See run_pipeline for the cache-vs-recompute tradeoff; at
+full 100 TB scale the per-wave distinct-mention table is what crosses the
+phase boundary to storage (job.py's `wave_distinct`), and the extraction
+is never executor-memory cached beyond one wave.
 """
 
 from __future__ import annotations
@@ -28,7 +28,6 @@ from .operators.curation import curation_table, merge_mapping_databases
 from .operators.linking import link_cascade
 from .operators.mentions import (
     distinct_mentions,
-    distinct_mentions_with_stop_counts,
     extract_turn_mentions,
     occurrences,
     turn_filter,
@@ -45,10 +44,7 @@ MATCH_TYPES = ("exact", "normalized", "fuzzy", "xref", "replacement")
 class PipelineResult:
     transcripts: DataFrame
     extracted: DataFrame  # one row per turn: (conv_id, turn_idx, valid, ms)
-    mentions_all: DataFrame  # includes stop-listed (for counters)
-    mentions: DataFrame
-    distinct_all: DataFrame  # lazy A1 view incl. stop-listed rows (S6 spill)
-    distinct: DataFrame
+    distinct: DataFrame  # A1 pre-aggregation of the stop-filtered mentions
     links: DataFrame
     candidates: DataFrame
     unresolved: DataFrame
@@ -77,7 +73,6 @@ def run_pipeline(
     xrefs: DataFrame | None = None,
     vocabulary: list[str] | None = None,
     persist_extracted: bool = False,
-    spill_dir: str | None = None,
 ) -> PipelineResult:
     terms = terms if terms is not None else demo_terms(spark)
     xrefs = xrefs if xrefs is not None else demo_xrefs(spark)
@@ -85,45 +80,22 @@ def run_pipeline(
 
     with Persisted() as held:
         # ONE extraction definition that every downstream view derives from.
-        # persist_extracted=False by default: measured head-to-head, recomputing
-        # the extraction for the second consumer branch beats caching it — the
-        # columnar cache has no vectorized path for array<struct> columns, so
-        # cache build+read is SLOWER than the UDF recompute at >=8 cores
-        # (local[8], 2M turns: 46.7 s recompute vs 54.9 s cached; at local[32]
-        # the gap widens — the same pathology round 1 hit with the occurrence
-        # cache). At 100 TB the right move is materializing the extraction to a
-        # bucketed table between stages (the checkpoint runner does exactly
-        # that per wave), not executor-memory caching. persist_extracted=True
-        # remains available for low-core/memory-rich profiles, where halving
-        # the UDF passes wins (local[2]: 78.6 s cached vs 154.8 s recompute).
+        # persist_extracted=False by default: the columnar cache has no
+        # vectorized path for array<struct> columns, so building and reading
+        # it cost more than recomputing the extraction for the second
+        # consumer branch (local[8], 2M turns: 54.9 s cached vs 46.7 s
+        # recompute, measured with the slower Python extractor the in-row
+        # expression replaced). Callers that run several actions over one
+        # extraction (the wave job, kg_curation) pass True.
         extracted = extract_turn_mentions(transcripts, vocabulary, include_invalid=True)
         if persist_extracted:
             extracted = persist(extracted)
 
-        mentions_all = occurrences(extracted, drop_stoplisted=False)
-        mentions = mentions_all.filter(~F.col("mention_norm").isin(*sorted(STOPLIST)))
-        # A1 pre-agg. distinct_all (stoplisted rows retained, hot keys guarded —
-        # see distinct_mentions_with_stop_counts) is a LAZY side view for
-        # callers that want the spilled phase table; the cascade probes
-        # `distinct` directly so the triples hot path stays on the PRUNED
-        # aggregation — the cascade only consumes mention_norm, and Catalyst
-        # collapses the groupBy to a bare distinct-keys aggregate with no
-        # count_distinct expansion. (Round-3 measured: persisting the full
-        # 3-aggregate distinct_all inside the cascade chain forced the x3
-        # Expand over every occurrence into the flagship path — 10,300 ->
-        # 6,400 turns/sec. Metrics pay one extra dictionary-scale job instead;
-        # see compute_metrics.)
-        distinct_all = distinct_mentions_with_stop_counts(mentions_all)
-        if spill_dir:
-            # S6 phase boundary (reference trait_mapping/main.py:78-97): the
-            # parse phase materializes the distinct-mention table to storage and
-            # the process phase (cascade) reads the file back.
-            from .plans.checkpoint import spill_reload
-
-            distinct_all = spill_reload(distinct_all, f"{spill_dir}/distinct_mentions")
-            distinct = distinct_all.filter(~F.col("mention_norm").isin(*sorted(STOPLIST)))
-        else:
-            distinct = distinct_mentions(mentions)
+        # A1 pre-agg. The cascade only consumes mention_norm, so Catalyst
+        # prunes this to a bare distinct-keys aggregate on the triples path;
+        # consumers that read freq/occurrences (metrics, curation, the wave
+        # job's wave_distinct table) get the full aggregate.
+        distinct = distinct_mentions(occurrences(extracted))
         links, candidates, unresolved = link_cascade(distinct, terms, xrefs)
         # shuffle-free triple path: per-turn uniqueness established inside the
         # extraction row (array_distinct on the same ms column), not via a
@@ -133,9 +105,6 @@ def run_pipeline(
     return PipelineResult(
         transcripts=transcripts,
         extracted=extracted,
-        mentions_all=mentions_all,
-        mentions=mentions,
-        distinct_all=distinct_all,
         distinct=distinct,
         links=links,
         candidates=candidates,

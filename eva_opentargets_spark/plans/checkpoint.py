@@ -28,23 +28,6 @@ def bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
 
-def spill_reload(df: DataFrame, path: str, fmt: str = "parquet") -> DataFrame:
-    """S6 — the explicit phase boundary: write a (dictionary-scale) table to
-    storage and reload it, so every downstream consumer reads the
-    materialized file instead of re-deriving the upstream plan. The
-    reference does exactly this between its parse and process phases —
-    distinct trait names spill to CSV and reload
-    (cmat/trait_mapping/main.py:78-97); fmt='csv' reproduces that wire
-    format (header row, schema re-inferred), fmt='parquet' is the
-    production choice (typed, splittable, predicate-pushdown-able)."""
-    spark = df.sparkSession
-    if fmt == "csv":
-        df.write.mode("overwrite").option("header", True).csv(path)
-        return spark.read.option("header", True).option("inferSchema", True).csv(path)
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
 class CheckpointManifest:
     """Filesystem manifest of completed buckets (one JSON line per bucket,
     with lineage counters — the Report/counts.yml analog, report.py:79-98)."""

@@ -293,7 +293,7 @@ def kg_evidence(spark, sf_dir):
     # NB: no size(valid_names) predicate here — a record with zero valid
     # mentions has an EMPTY disease_groups array, so the explode emits
     # nothing for it anyway. Filtering on it would be redundant AND would
-    # force the extraction UDF to run twice (once under the Filter, once in
+    # force the extraction to run twice (once under the Filter, once in
     # the payload projection — Catalyst does not CSE across the two).
     eligible = recs.filter(
         F.col("valid")

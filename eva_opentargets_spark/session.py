@@ -4,7 +4,7 @@ cache lifecycle (:func:`persist` + :class:`Persisted`).
 Defaults target the sandbox (local[N], 128 GiB) but every knob is the one
 you would set on a 1000-executor cluster: AQE on (runtime re-plan +
 skew-join splitting), modest advisory partition sizes, Arrow enabled for
-the pandas-UDF mention/linking path.
+the few pandas UDFs (disease groups above their gate, stateful streaming).
 """
 
 from __future__ import annotations

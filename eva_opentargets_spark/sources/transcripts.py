@@ -33,7 +33,7 @@ def derive_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conv_id-hash repartition mirrors the production bucketed-table layout
     # (write_transcripts below) — but ONLY when the input layout actually
     # under-parallelizes the scan (the testdata is one parquet file = 1-2
-    # input splits, which would serialize the extraction UDF onto 2 cores).
+    # input splits, which would serialize the extraction onto 2 cores).
     # A properly bucketed production table skips this shuffle entirely.
     from ..session import estimated_input_splits
 

@@ -2,17 +2,22 @@
 transcript table.
 
 The reference is pure batch (SURVEY.md §2.8) — this is the engine-new
-streaming surface: the same vectorized mention-extraction UDF applied to a
-file stream, with event-time windows + watermark for late turns. At scale
-the source is an Iceberg/Kafka stream; here a parquet directory exercised
-with Trigger.AvailableNow.
+streaming surface: the batch mention extraction (the in-row gazetteer
+expression) applied to a file stream, with event-time windows + watermark
+for late turns. At scale the source is an Iceberg/Kafka stream; here a
+parquet directory exercised with Trigger.AvailableNow.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.mentions import make_extract_udf, turn_filter
+from ..operators.mentions import (
+    cached_mention_expr,
+    extract_turn_mentions,
+    turn_filter,
+    unique_per_turn,
+)
 from ..schemas import TRANSCRIPTS
 
 
@@ -28,12 +33,13 @@ def stream_mention_counts(
     Returns an unstarted streaming DataFrame; callers attach writeStream
     (tests use format('memory') + trigger(availableNow=True)).
     """
-    udf = make_extract_udf(vocabulary)
     stream = spark.readStream.schema(TRANSCRIPTS).parquet(input_path)
+    # the batch gazetteer column itself: extract_turn_mentions drops `ts`,
+    # which the watermark needs
     return (
         stream.filter(turn_filter())
         .withWatermark("ts", watermark)
-        .select("ts", F.explode(udf(F.col("text"))).alias("m"))
+        .select("ts", F.explode(cached_mention_expr(tuple(vocabulary))).alias("m"))
         .groupBy(F.window("ts", window).alias("w"), F.col("m.mention_norm").alias("mention_norm"))
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("window_start"), "mention_norm", "n")
@@ -49,10 +55,10 @@ def stream_triples(
     checkpoint_dir: str,
 ):
     """Streaming triple emission: new transcript files -> mention extraction
-    (same vectorized UDF as batch) -> broadcast join against a precomputed
-    link table -> parquet append. Exactly-once via the streaming checkpoint
-    (the engine-managed twin of plans/checkpoint.py). Returns the started
-    query; callers await/stop it.
+    (the batch extract_turn_mentions + unique_per_turn) -> broadcast join
+    against a precomputed link table -> parquet append. Exactly-once via
+    the streaming checkpoint (the engine-managed twin of
+    plans/checkpoint.py). Returns the started query; callers await/stop it.
 
     Design note: the link table must be batch-precomputed (the cascade needs
     corpus-wide distinct mentions); streaming handles the corpus-scale,
@@ -60,19 +66,8 @@ def stream_triples(
     """
     from ..operators.triples import emit_triples
 
-    udf = make_extract_udf(vocabulary)
     stream = spark.readStream.schema(TRANSCRIPTS).parquet(input_path)
-    mentions = (
-        stream.filter(turn_filter())
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.explode_outer(
-                F.array_distinct(F.transform(udf(F.col("text")), lambda m: m["mention_norm"]))
-            ).alias("mention_norm"),
-        )
-        .filter(F.col("mention_norm").isNotNull())
-    )
+    mentions = unique_per_turn(extract_turn_mentions(stream, vocabulary))
     triples = emit_triples(mentions, links, unique_per_turn=True)
     return (
         triples.writeStream.format("parquet")

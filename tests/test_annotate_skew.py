@@ -1,10 +1,9 @@
-"""Annotated write-back (S8) and skew-utility tests."""
+"""Annotated write-back (S8) tests."""
 
 from pyspark.sql import functions as F
 
 from eva_opentargets_spark import synth
 from eva_opentargets_spark.operators.annotate import annotate_transcripts
-from eva_opentargets_spark.operators.skew import salt_join_skewed, salted_count
 from eva_opentargets_spark.pipeline import run_pipeline
 
 
@@ -31,19 +30,3 @@ def test_annotations_sorted_and_complete(spark):
     n_ann = annotated.select(F.explode("annotations")).count()
     assert n_ann == res.triples.count()
 
-
-def test_salted_count_matches_plain(spark):
-    df = spark.createDataFrame(
-        [("hot",)] * 500 + [("cold1",), ("cold2",)], "k string"
-    )
-    got = {r.k: r["count"] for r in salted_count(df, ["k"], n_salts=8).collect()}
-    assert got == {"hot": 500, "cold1": 1, "cold2": 1}
-
-
-def test_salt_join_skewed_matches_plain(spark):
-    facts = spark.createDataFrame([("k1", i) for i in range(300)] + [("k2", 0)], "k string, v int")
-    dim = spark.createDataFrame([("k1", "a"), ("k2", "b")], "k string, payload string")
-    salted = salt_join_skewed(facts, dim, "k", n_salts=4)
-    plain = facts.join(dim, "k")
-    assert salted.count() == plain.count() == 301
-    assert salted.exceptAll(plain).count() == 0

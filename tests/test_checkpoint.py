@@ -113,33 +113,3 @@ def test_run_waves_side_tables_and_cleanup(spark, tmp_path):
     assert got == want
     res2.unpersist()
 
-
-def test_spill_reload_phase_boundary(spark, tmp_path):
-    """S6 — the explicit parse/process phase boundary (reference
-    trait_mapping/main.py:78-97): the distinct-mention table spills to
-    storage and downstream stages read the materialized file; results are
-    identical to the in-memory path, in both parquet and CSV wire formats."""
-    from eva_opentargets_spark.plans.checkpoint import spill_reload
-    from eva_opentargets_spark.pipeline import run_pipeline
-    from eva_opentargets_spark.sources.transcripts import derive_transcripts
-
-    t = derive_transcripts(spark, "/root/testdata/sf0.001")
-    res_mem = run_pipeline(spark, t)
-    res_spill = run_pipeline(spark, t, spill_dir=str(tmp_path / "phases"))
-
-    # the spilled table exists on disk and is what downstream read
-    import os
-    assert os.path.isdir(tmp_path / "phases" / "distinct_mentions")
-    want = {tuple(r) for r in res_mem.links.collect()}
-    got = {tuple(r) for r in res_spill.links.collect()}
-    assert got == want
-    res_mem.unpersist()
-    res_spill.unpersist()
-
-    # CSV wire format round-trips the dictionary-scale table too (the
-    # reference's actual spill format)
-    dm = res_mem.distinct_all
-    back = spill_reload(dm, str(tmp_path / "dm_csv"), fmt="csv")
-    a = {(r["mention_norm"], int(r["freq"])) for r in dm.collect()}
-    b = {(r["mention_norm"], int(r["freq"])) for r in back.collect()}
-    assert a == b

@@ -80,25 +80,28 @@ def test_ivf_kmeans_topk_matches_brute_force_within_probed_cells(spark):
 def test_assign_cells_sql_literal_path_matches_lambda_path(spark):
     """The single-parse SQL centroid literal (round 6) must assign every
     vector to the SAME cell as the per-centroid lambda build it replaced —
-    including on exact ties — and non-finite centroids must fall back to
-    the lambda path rather than emit an unparseable literal."""
+    including on exact ties — and must spell NaN/±Infinity centroids so
+    they assign exactly as the lambda build does."""
     from pyspark.sql import functions as F
 
     from eva_opentargets_spark.operators.kmeans import _cents_sql, _sq_dist
 
     emb = _emb(spark)
     cents, _ = kmeans(emb, k=4, max_iters=2)
-    assert _cents_sql(cents) is not None  # data-derived means are finite
 
-    v = emb.select(F.col("vec_id").alias("vid"),
-                   F.col("embedding").cast("array<double>").alias("e"))
-    dists = F.array(*[_sq_dist(F.col("e"), c) for c in cents])
-    lambda_cells = v.select(
-        "vid", ((F.array_position(dists, F.array_min(dists)) - 1).cast("int")).alias("cell")
-    )
-    sql_cells = assign_cells(emb, cents).select("vid", "cell")
-    assert sql_cells.exceptAll(lambda_cells).count() == 0
-    assert lambda_cells.exceptAll(sql_cells).count() == 0
+    def assert_same_cells(emb, cents):
+        v = emb.select(F.col("vec_id").alias("vid"),
+                       F.col("embedding").cast("array<double>").alias("e"))
+        dists = F.array(*[_sq_dist(F.col("e"), c) for c in cents])
+        lambda_cells = v.select(
+            "vid", ((F.array_position(dists, F.array_min(dists)) - 1).cast("int")).alias("cell")
+        )
+        sql_cells = assign_cells(emb, cents).select("vid", "cell")
+        assert sql_cells.count() == lambda_cells.count() > 0
+        assert sql_cells.exceptAll(lambda_cells).count() == 0
+        assert lambda_cells.exceptAll(sql_cells).count() == 0
+
+    assert_same_cells(emb, cents)
 
     # scientific-notation reprs round-trip through the literal
     tiny = [[1e-17, -3.5e200], [0.0, 0.0]]
@@ -106,11 +109,15 @@ def test_assign_cells_sql_literal_path_matches_lambda_path(spark):
                                "vec_id long, embedding array<double>")
     assert assign_cells(df, tiny).collect()[0]["cell"] == 0
 
-    # non-finite centroid -> fallback path, same argmin semantics
-    assert _cents_sql([[float("nan"), 0.0]]) is None
-    df2 = spark.createDataFrame([(0, [1.0, 2.0])],
+    # non-finite centroids: the literal spells them, same argmin as lambdas
+    inf, nan = float("inf"), float("nan")
+    assert "NaN" in _cents_sql([[nan, 0.0]]) and "-Infinity" in _cents_sql([[-inf, 0.0]])
+    df2 = spark.createDataFrame([(0, [1.0, 2.0]), (1, [-5.0, 0.0]), (2, [nan, 1.0])],
                                 "vec_id long, embedding array<double>")
-    out = assign_cells(df2, [[float("inf"), 0.0], [0.0, 0.0]]).collect()[0]
+    for bad in ([[inf, 0.0], [0.0, 0.0]], [[nan, 0.0], [3.0, 3.0]],
+                [[-inf, 1.0], [nan, nan], [0.0, 0.0]]):
+        assert_same_cells(df2, bad)
+    out = assign_cells(df2.filter("vec_id = 0"), [[inf, 0.0], [0.0, 0.0]]).collect()[0]
     assert out["cell"] == 1
 
 

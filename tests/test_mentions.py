@@ -105,86 +105,115 @@ def test_distinct_mention_preagg(spark):
     assert row.freq == 3 and row.occurrences == 4 and row.n_conversations == 2
 
 
+def _token_loop(text, vocab):
+    """The reference gazetteer semantics the DuckDB oracles pin: tokens =
+    text.lower().split(' '), a unigram hit per vocabulary token, a bigram hit
+    per adjacent pair, emitted pos ascending with the unigram first."""
+    toks = text.lower().split(" ")
+    uni = {w for w in vocab if " " not in w}
+    big = {w for w in vocab if " " in w}
+    hits = []
+    for i, tok in enumerate(toks):
+        if tok in uni:
+            hits.append((i, tok))
+        if i + 1 < len(toks) and tok + " " + toks[i + 1] in big:
+            hits.append((i, tok + " " + toks[i + 1]))
+    return hits
+
+
+_TRICKY_VOCAB = ["spark", "merge", "sort", "sort merge", "hash join", "join", "batch!", "a"]
+_TRICKY_TEXTS = [
+    "sort merge sort merge",          # overlapping unigram + bigram
+    "x hash join spark",
+    "spark  merge",                   # double space -> empty token
+    "sorting sort sorted",            # prefixes must not match
+    "batch! a spark",                 # punctuation token, 1-char word
+    "hash join join hash",
+    "",                               # empty
+    "spark",                          # single token
+    " spark",                         # leading space
+    "spark ",                         # trailing space
+    "merge sort merge",               # bigram spanning mid-positions
+]
+
+
 def test_regex_extractor_equals_token_loop(spark):
-    """The C-regex gazetteer must be exactly equivalent to the reference
-    token-loop semantics (which the DuckDB oracles pin): same mentions,
-    same positions, for tricky inputs — overlaps, double spaces, prefixes,
-    punctuation tokens, boundaries."""
-    import pandas as pd
+    """The in-row gazetteer expression equals the token-loop reference row
+    for row, ORDER within a turn included, on tricky inputs: overlaps,
+    double spaces, prefixes, punctuation tokens, boundaries."""
+    from eva_opentargets_spark.operators.mentions import mention_expr
 
-    from eva_opentargets_spark.operators.mentions import make_extract_udf
+    texts = _TRICKY_TEXTS
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
+    rows = df.select("i", mention_expr(_TRICKY_VOCAB).alias("e")).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        got = [(m["pos"], m["mention_norm"]) for m in r["e"]]
+        want = _token_loop(texts[r["i"]], _TRICKY_VOCAB)
+        assert got == want, (texts[r["i"]], got, want)
 
-    vocab = ["spark", "merge", "sort", "sort merge", "hash join", "join", "batch!", "a"]
-    texts = [
-        "sort merge sort merge",          # repeated overlapping bigrams
-        "x hash join spark",
-        "spark  merge",                   # double space (empty token)
-        "sorting sort sorted",            # prefix-sharing tokens
-        "batch! a spark",                 # punctuation token + single char
-        "hash join join hash",
-        "",                               # empty
-        "spark",                          # single token
-        " spark",                         # leading space
-        "spark ",                         # trailing space
-        "merge sort merge",               # bigram spanning mid-positions
+
+def test_mention_expr_equals_udf(spark):
+    """The in-row expression is row-for-row identical, ORDER within a turn
+    included, to the token-loop reference run as a Python UDF over the same
+    rows — case folding and a repeated one-character unigram included."""
+    from eva_opentargets_spark.operators.mentions import MENTION_STRUCT, mention_expr
+
+    texts = _TRICKY_TEXTS + [
+        "A SPARK Sort Merge",            # case folding
+        "a a a a",                       # repeated single-char unigram
     ]
+    uni = {w for w in _TRICKY_VOCAB if " " not in w}
+    big = {w for w in _TRICKY_VOCAB if " " in w}
 
-    def loop_reference(text):
+    def loop(text):
+        # _token_loop restated here: the UDF runs in workers that cannot
+        # import this test module, so it must close over nothing but sets.
         toks = text.lower().split(" ")
-        uni = {w for w in vocab if " " not in w}
-        big = {w for w in vocab if " " in w}
         hits = []
         for i, tok in enumerate(toks):
             if tok in uni:
                 hits.append((i, tok))
             if i + 1 < len(toks) and tok + " " + toks[i + 1] in big:
                 hits.append((i, tok + " " + toks[i + 1]))
-        return sorted(hits)
+        return hits
 
-    # drive the pandas UDF's inner function directly via Spark
+    reference = F.udf(loop, MENTION_STRUCT)
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
-    udf = make_extract_udf(vocab)
-    from pyspark.sql import functions as F2
-
-    got_rows = df.select("i", udf(F2.col("text")).alias("ms")).collect()
-    for r in got_rows:
-        got = sorted((m["pos"], m["mention_norm"]) for m in r["ms"])
-        want = loop_reference(texts[r["i"]])
-        assert got == want, (texts[r["i"]], got, want)
-
-
-def test_mention_expr_equals_udf(spark):
-    """The in-row JVM gazetteer expression (round-6 optimization: removes
-    the ArrowEvalPython node from the flagship scan) must be row-for-row
-    identical to the pandas UDF, including ORDER within a turn."""
-    from pyspark.sql import functions as F2
-
-    from eva_opentargets_spark.operators.mentions import make_extract_udf, mention_expr
-
-    vocab = ["spark", "merge", "sort", "sort merge", "hash join", "join", "batch!", "a"]
-    texts = [
-        "sort merge sort merge",
-        "x hash join spark",
-        "spark  merge",
-        "sorting sort sorted",
-        "batch! a spark",
-        "hash join join hash",
-        "",
-        "spark",
-        " spark",
-        "spark ",
-        "merge sort merge",
-        "A SPARK Sort Merge",            # case folding
-        "a a a a",                       # repeated single-char unigram
-    ]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
-    udf = make_extract_udf(vocab)
     rows = df.select(
         "i",
-        udf(F2.col("text")).alias("u"),
-        mention_expr(vocab).alias("e"),
+        reference(F.col("text")).alias("u"),
+        mention_expr(_TRICKY_VOCAB).alias("e"),
     ).collect()
+    assert len(rows) == len(texts)
     for r in rows:
         u = [(m["pos"], m["mention_norm"]) for m in r["u"]]
         e = [(m["pos"], m["mention_norm"]) for m in r["e"]]
         assert u == e, (texts[r["i"]], u, e)
+
+
+def test_large_vocabulary_stays_in_row(spark):
+    """Above 10,000 terms extraction still runs as the in-row expression —
+    no Python evaluation node in the plan — and matches the token loop."""
+    from eva_opentargets_spark.operators.mentions import extract_turn_mentions
+
+    vocab = VOCAB + [f"term{i}" for i in range(9_000)] + [
+        f"big{i} gram" for i in range(10_001 - 9_000 - len(VOCAB))
+    ]
+    assert len(vocab) == 10_001
+    texts = [
+        "term0 spark big7 gram term8999",
+        "Big0 Gram big0 gram term9000",   # term9000 is not in the vocabulary
+        "sort merge  term42 hash join",
+        "nothing here",
+    ]
+    t = _turns(spark, [("c1", i, "user", x, None, "2025-01-01 00:00:00") for i, x in enumerate(texts)])
+    ex = extract_turn_mentions(t, vocab)
+    plan = ex._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    rows = ex.collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        got = [(m["pos"], m["mention_norm"]) for m in r["ms"]]
+        want = _token_loop(texts[r["turn_idx"]], vocab)
+        assert got == want, (texts[r["turn_idx"]], got, want)
